@@ -3,8 +3,12 @@
 The reference's query surface is "any SQL against the DuckDB file"
 (dashboard/app.py:200-214 runs user-chosen SELECTs). The Spark twin:
 register every base table and derived table as a temp view, then
-``spark.sql(...)`` is the same open-ended surface — with Catalyst
-doing pushdown/pruning against the parquet scans underneath.
+``spark.sql(...)`` is the same open-ended surface. Base tables stay lazy
+views over the parquet scans, so Catalyst prunes and pushes down per
+query. The derived ``supplier_kpis`` and ``supplier_risk_summary`` are
+materialized once per ``create_views`` call, like the reference's stored
+tables (src/compute_kpis.py, src/compute_risk.py), so dashboard requests
+read them instead of re-running KPI and risk scoring.
 """
 
 from __future__ import annotations
@@ -34,8 +38,14 @@ def create_views(
 ) -> list[str]:
     """Register every parquet table in ``sf_dir`` as a temp view, plus
     the derived supplier_kpis / supplier_risk_summary views. Returns the
-    view names. Views are lazy — registering costs nothing; Catalyst
-    prunes/pushes down per query."""
+    view names.
+
+    Base-table views are lazy: registering them runs no job. The two
+    derived views are materialized here, once per call: the KPI table is
+    built once and locally checkpointed, and the risk summary is scored
+    from that checkpoint and checkpointed in turn. Both are one row per
+    supplier. Their checkpoint blocks are reclaimed by the ContextCleaner
+    once a later call replaces the views."""
     tune_session(spark)
     # The events table stores ts as TIMESTAMP(NANOS) in some driver
     # generations (vectorized reader rejects it — read nanos as long)
@@ -57,13 +67,15 @@ def create_views(
         df.createOrReplaceTempView(name)
         registered.append(name)
     if include_derived:
-        from supplier_performance_data_pipeline_spark.plans.queries_core import (
-            _kpis,
-            _risk,
+        from supplier_performance_data_pipeline_spark.operators.risk import (
+            supplier_risk_summary,
         )
+        from supplier_performance_data_pipeline_spark.plans.queries_core import _kpis
 
-        _kpis(spark, sf_dir).createOrReplaceTempView("supplier_kpis")
-        _risk(spark, sf_dir).createOrReplaceTempView("supplier_risk_summary")
+        kpis = _kpis(spark, sf_dir).localCheckpoint()
+        kpis.createOrReplaceTempView("supplier_kpis")
+        risk = supplier_risk_summary(kpis, cache=False).localCheckpoint()
+        risk.createOrReplaceTempView("supplier_risk_summary")
         registered += ["supplier_kpis", "supplier_risk_summary"]
     return registered
 

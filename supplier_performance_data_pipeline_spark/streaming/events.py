@@ -323,30 +323,35 @@ def run_to_memory_sink(
     ``_run_concurrent`` alongside batch planning — the lock cannot
     protect threads that mutate or read the same conf outside it."""
     spark = stream_df.sparkSession
-    with _CONF_LOCK:
-        prev: str | None = None
-        if shuffle_partitions is not None:
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(int(shuffle_partitions))
-            )
-        try:
-            q = (
-                stream_df.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-        finally:
-            # The partition count is captured into the query's own
-            # checkpoint at start; restore as soon as that has happened
-            # so the lock guards the narrowest possible window.
-            if prev is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = None
     try:
+        with _CONF_LOCK:
+            prev: str | None = None
+            if shuffle_partitions is not None:
+                prev = spark.conf.get("spark.sql.shuffle.partitions")
+                spark.conf.set(
+                    "spark.sql.shuffle.partitions", str(int(shuffle_partitions))
+                )
+            try:
+                q = (
+                    stream_df.writeStream.outputMode(output_mode)
+                    .format("memory")
+                    .queryName(name)
+                    .start()
+                )
+            finally:
+                # The partition count is captured into the query's own
+                # checkpoint at start; restore as soon as that has
+                # happened so the lock guards the narrowest possible
+                # window.
+                if prev is not None:
+                    spark.conf.set("spark.sql.shuffle.partitions", prev)
         q.processAllAvailable()
     finally:
-        q.stop()
+        # Also reached when the restore above raises after start(): the
+        # started query must not outlive the call.
+        if q is not None:
+            q.stop()
 
 
 def streaming_upsert_sink(

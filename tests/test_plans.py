@@ -947,12 +947,15 @@ def test_backlog_sweep_line_one_fact_pass(spark, specs):
     assert shuffles(plan) <= 4
 
 
-def test_image_pixel_stats_pure_arrow_no_shuffle(spark, specs):
+def test_image_pixel_stats_arrow_one_doc_id_spread(spark, specs):
     # Synthesis and REAL-decode feature extraction are both mapInPandas
-    # projections: one scan, zero exchanges.
+    # projections over one scan. The only exchange is spread_scan's
+    # doc_id hash spread of the single-split fixture scan, so the codec
+    # work runs at cluster parallelism rather than in one task.
     plan = plan_of(spark, specs, "multimodal_image_pixel_stats")
     assert plan.count("MapInPandas") == 2
-    assert shuffles(plan) == 0
+    assert shuffles(plan) == 1
+    assert re.search(r"Exchange hashpartitioning\(doc_id", plan)
     assert plan.count("Location: InMemoryFileIndex") == 1
 
 

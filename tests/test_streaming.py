@@ -4,6 +4,7 @@ events parquet must equal the batch operator's result."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from supplier_performance_data_pipeline_spark.operators.windows import hourly_rollup
 from supplier_performance_data_pipeline_spark.streaming.events import (
@@ -128,3 +129,37 @@ def test_stream_static_dim_join_enriches_per_user_rollup(spark):
         .toPandas()
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_run_to_memory_sink_stops_query_when_conf_restore_raises(spark, monkeypatch):
+    # The query is already running when the shuffle-partitions restore
+    # fails: the error must propagate and the query must not be left
+    # active in the session.
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    real_set = RuntimeConfig.set
+    sets = []
+
+    def restore_raises(self, k, v):
+        if k == key:
+            sets.append(v)
+            if len(sets) == 2:
+                raise RuntimeError("conf restore failed")
+        return real_set(self, k, v)
+
+    stream = read_event_stream(spark, EVENTS_DIR)
+    monkeypatch.setattr(RuntimeConfig, "set", restore_raises)
+    try:
+        with pytest.raises(RuntimeError, match="conf restore failed"):
+            run_to_memory_sink(
+                streaming_hourly_rollup(stream),
+                "restore_fails_out",
+                shuffle_partitions=2,
+            )
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)
+    assert sets == ["2", prev]
+    assert spark.streams.active == []
