@@ -605,45 +605,6 @@ def _write_local_record(out: dict) -> str:
     rounds = _round_files()
     this_round = (max(r for r, _ in rounds) + 1) if rounds else 1
     here = os.path.dirname(os.path.abspath(__file__))
-    # Attach the one-shot ANN scale probe (bench_ann_sf1.py) when it has
-    # been run: the sampled-codebook structural claim's data point at
-    # 100x the sf0.1 fixture, recorded per round without re-paying the
-    # multi-minute probe inside the driver's bench timeout.
-    ann_path = os.path.join(here, "ANN_SF1.json")
-    if os.path.exists(ann_path):
-        try:
-            with open(ann_path) as f:
-                out["ann_sf1"] = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            pass
-    # Same attach for the PPJoin+ suffix-filter fat-doc A/B
-    # (bench_suffix_ab.py): the ON-regime economics data point.
-    sab_path = os.path.join(here, "SUFFIX_AB.json")
-    if os.path.exists(sab_path):
-        try:
-            with open(sab_path) as f:
-                out["suffix_ab"] = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            pass
-    # Same attach for idle re-probe receipts (REPROBE.json): isolated
-    # min-of-3 re-measurements that adjudicate driver-flagged
-    # regressions on untouched code (r12 VERDICT #1 ritual).
-    rp_path = os.path.join(here, "REPROBE.json")
-    if os.path.exists(rp_path):
-        try:
-            with open(rp_path) as f:
-                out["reprobe"] = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            pass
-    # Same attach for the dedup/CC scale probe (bench_dedup_sf1.py):
-    # LSH quadratic-avoidance + star-contraction round count at 100x.
-    dsf_path = os.path.join(here, "DEDUP_SF1.json")
-    if os.path.exists(dsf_path):
-        try:
-            with open(dsf_path) as f:
-                out["dedup_sf1"] = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            pass
     name = f"BENCH_LOCAL_r{this_round}.json"
     path = os.path.join(here, name)
     try:

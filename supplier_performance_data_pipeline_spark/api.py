@@ -13,29 +13,20 @@ read them instead of re-running KPI and risk scoring.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from supplier_performance_data_pipeline_spark.operators.risk import (
+    supplier_risk_summary,
+)
+from supplier_performance_data_pipeline_spark.plans.queries_core import _kpis
 from supplier_performance_data_pipeline_spark.session import tune_session
-
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from supplier_performance_data_pipeline_spark.sources.readers import load_testdata
+from supplier_performance_data_pipeline_spark.streaming.events import (
+    normalize_event_ts,
+)
 
 
-def create_views(
-    spark: SparkSession, sf_dir: str, include_derived: bool = True
-) -> list[str]:
+def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register every parquet table in ``sf_dir`` as a temp view, plus
     the derived supplier_kpis / supplier_risk_summary views. Returns the
     view names.
@@ -52,32 +43,17 @@ def create_views(
     # and plain µs TIMESTAMP in others; normalize to µs timestamps
     # either way (same convention as plans/queries_events.py).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    registered = []
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
-        if name == "events":
-            from supplier_performance_data_pipeline_spark.streaming.events import (
-                normalize_event_ts,
-            )
-
-            df = normalize_event_ts(df)
+    tables = load_testdata(spark, sf_dir)
+    if "events" in tables:
+        tables["events"] = normalize_event_ts(tables["events"])
+    for name, df in tables.items():
         df.createOrReplaceTempView(name)
-        registered.append(name)
-    if include_derived:
-        from supplier_performance_data_pipeline_spark.operators.risk import (
-            supplier_risk_summary,
-        )
-        from supplier_performance_data_pipeline_spark.plans.queries_core import _kpis
-
-        kpis = _kpis(spark, sf_dir).localCheckpoint()
-        kpis.createOrReplaceTempView("supplier_kpis")
-        risk = supplier_risk_summary(kpis, cache=False).localCheckpoint()
-        risk.createOrReplaceTempView("supplier_risk_summary")
-        registered += ["supplier_kpis", "supplier_risk_summary"]
-    return registered
+    kpis = _kpis(spark, sf_dir).localCheckpoint()
+    kpis.createOrReplaceTempView("supplier_kpis")
+    supplier_risk_summary(kpis).localCheckpoint().createOrReplaceTempView(
+        "supplier_risk_summary"
+    )
+    return [*tables, "supplier_kpis", "supplier_risk_summary"]
 
 
 def sql(spark: SparkSession, query: str) -> DataFrame:

@@ -712,7 +712,7 @@ def _suffix_filter(
     verify join that costs ~2 s on the same candidates, because at
     fixture scale the verify shuffle is local and vectorized.
 
-    FAT-DOC A/B (round-9, bench_suffix_ab.py → SUFFIX_AB.json): a
+    FAT-DOC A/B (round-9; the probe and its record are in git history): a
     fixture built adversarially FOR the suffix stage — |set| = 1000,
     5,700 candidates that pass length+positional, fail verify, and
     are 100% suffix-prunable (group-shared prefix blocks + disjoint

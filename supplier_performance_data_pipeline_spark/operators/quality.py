@@ -7,6 +7,11 @@ it as a broadcast/shuffled anti join without materializing the outer rows.
 
 PRIMARY KEY constraints have no Spark equivalent; ``assert_unique_key``
 is the declarative replacement (count vs. countDistinct in one agg).
+
+Two orphan checks stay on purpose: on the nightly load one anti-join
+``orphan_count`` per direction costs about half the CPU of routing the
+same assertion through the union aggregate, while ``orphan_counts_df``
+keeps the registered queries' both-direction count join-free.
 """
 
 from __future__ import annotations

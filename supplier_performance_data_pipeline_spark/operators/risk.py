@@ -37,21 +37,14 @@ def kpi_bounds(kpis: DataFrame) -> DataFrame:
     return kpis.agg(*aggs)
 
 
-def supplier_risk_summary(kpis: DataFrame, cache: bool = True) -> DataFrame:
+def supplier_risk_summary(kpis: DataFrame) -> DataFrame:
     """Normalize KPIs, average into performance_score, blend with
     financial risk into risk_score (reference: src/compute_risk.py:54-111).
 
-    The KPI subplan appears twice in this plan (bounds agg + the row
-    side of the cross join). ``cache=True`` materializes the KPI table
-    — one row per supplier, KB-scale even at 100 TB input — so the raw
-    fact scan happens once instead of twice. An eager localCheckpoint,
-    not ``persist``: registered queries build this per run with nobody
-    owning an unpersist, and checkpoint blocks are reclaimed by the
-    ContextCleaner when the result is dropped, so repeated builds leave
-    no residue in the session CacheManager.
+    ``kpis`` is read twice (bounds agg + the row side of the cross
+    join), so pass a materialized KPI table — a Parquet re-read or a
+    checkpoint; a caller holding the raw KPI plan checkpoints it first.
     """
-    if cache:
-        kpis = kpis.localCheckpoint()
     norm_cols = {
         "on_time_delivery_rate": "norm_on_time",
         "avg_delivery_delay_days": "norm_delay",

@@ -455,34 +455,40 @@ def _replay_partitions(
     table) instead of the session's cluster-wide default — streaming
     state stores are one per shuffle partition per micro-batch and
     never coalesce, so the fixed 32 was pure per-batch overhead at
-    fixture scale and would still be wrong (too small) at 100 TB.
+    fixture scale.
 
-    r14 (r13 ADVICE): sized from the input's on-disk BYTES (os.stat —
-    no Spark job at all) instead of a ``count()`` job that every
-    streaming equivalence query re-ran. One state task per ~256 KB of
-    parquet ≈ the old one-per-12.5k-rows rule at the events table's
-    ~20 B/row, floor 2 (multi-partition state semantics stay exercised
-    at the smallest fixtures); the count grows linearly with the
-    replayed bytes, so it is scale-adaptive, not a local constant."""
+    Sized from the input's on-disk BYTES (file metadata, no Spark job)
+    rather than a ``count()`` job per replay, and capped at 4x the
+    cluster's default parallelism, so a huge replay gets a
+    cluster-sized state fan-out."""
     from supplier_performance_data_pipeline_spark.streaming.events import (
         replay_state_bytes_partitions,
     )
 
     path = os.path.join(sf_dir, "events.parquet")
-    return replay_state_bytes_partitions(_input_bytes(path) * factor)
+    return replay_state_bytes_partitions(
+        _input_bytes(spark, path) * factor,
+        cap=4 * spark.sparkContext.defaultParallelism,
+    )
 
 
-def _input_bytes(path: str) -> int:
-    """Total on-disk bytes of a parquet file or directory (driver-side
-    metadata only — os.stat, never a Spark job)."""
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if not f.startswith((".", "_"))
-        )
-    return os.path.getsize(path)
+def _input_bytes(spark: SparkSession, path: str) -> int:
+    """Total bytes of a parquet file or directory tree, skipping
+    ``.``/``_``-prefixed side files (checksums, _SUCCESS). Driver-side
+    Hadoop FileSystem metadata — works on any filesystem Spark reads,
+    never a Spark job."""
+    from supplier_performance_data_pipeline_spark.operators.clustering import (
+        _hadoop_fs,
+    )
+
+    fs, jpath, _ = _hadoop_fs(spark, path)
+    files = fs.listFiles(jpath, True)
+    total = 0
+    while files.hasNext():
+        st = files.next()
+        if not st.getPath().getName().startswith((".", "_")):
+            total += st.getLen()
+    return total
 
 
 @register(

@@ -13,9 +13,7 @@ domain model — same shapes, same join graph:
 
 Caveat: the -ish testdata contains duplicate (l_orderkey, l_linenumber)
 pairs, so no arithmetic po_id is a unique join key — the fused per-line
-form below is the well-defined semantic, and the separate
-purchase_orders/deliveries projections exist for the supplier-domain
-operators, not for re-joining on po_id.
+form below is the well-defined semantic.
 
 Mapping choices (mirrored verbatim in the DuckDB oracle SQL so both
 engines compute identical values):
@@ -35,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-CATEGORIES = ["Packaging", "Raw Materials", "Logistics", "Electronics", "Textiles"]
+from supplier_performance_data_pipeline_spark.functions.scalar import on_time_flag
+from supplier_performance_data_pipeline_spark.generator import CATEGORIES
 
 
 def domain_suppliers(supplier: DataFrame, nation: DataFrame) -> DataFrame:
@@ -56,31 +55,6 @@ def domain_suppliers(supplier: DataFrame, nation: DataFrame) -> DataFrame:
             .cast("int")
             .alias("financial_risk_score"),
         )
-    )
-
-
-def domain_purchase_orders(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
-    """Planned-demand fact: one row per lineitem with its order's dates."""
-    return lineitem.join(
-        orders, lineitem.l_orderkey == orders.o_orderkey
-    ).select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("po_id"),
-        F.col("l_suppkey").alias("supplier_id"),
-        F.col("o_orderdate").cast("date").alias("order_date"),
-        F.date_add(F.col("o_orderdate").cast("date"), 30).alias("promised_date"),
-        F.col("l_quantity").alias("quantity_ordered"),
-    )
-
-
-def domain_deliveries(lineitem: DataFrame) -> DataFrame:
-    """Execution fact: one row per lineitem, 1:1 with purchase_orders."""
-    return lineitem.select(
-        (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("po_id"),
-        F.col("l_shipdate").cast("date").alias("delivery_date"),
-        (F.col("l_quantity") * (F.lit(1.0) - F.col("l_discount"))).alias(
-            "quantity_delivered"
-        ),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("quality_issues"),
     )
 
 
@@ -121,7 +95,7 @@ def domain_per_po_fused(
             "quality_issues"
         ),
         F.datediff(delivery, promised).alias("delivery_delay_days"),
-        F.when(delivery <= promised, 1).otherwise(0).alias("on_time_flag"),
+        on_time_flag(delivery, promised).alias("on_time_flag"),
     )
     return F.broadcast(sup).join(per_po, "supplier_id")
 

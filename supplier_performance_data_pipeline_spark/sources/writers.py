@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    coalesce: int | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Overwrite-mode Parquet sink; optional hive-style partitioning.
 
@@ -24,8 +21,6 @@ def write_parquet(
     partition pruning work at 100 TB — the reference has no notion of
     this (single DuckDB file), so it's engine value-add.
     """
-    if coalesce:
-        df = df.coalesce(coalesce)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

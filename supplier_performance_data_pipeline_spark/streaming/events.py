@@ -264,39 +264,26 @@ def streaming_dedup(
     )
 
 
-REPLAY_ROWS_PER_STATE_TASK = 12_500
-# Bytes-based twin of the rows rule: ~256 KB of parquet per state task
-# (the events table packs ~20 B/row on disk, so 12.5k rows ≈ 256 KB).
+# ~256 KB of parquet per state task (the events table packs ~20 B/row
+# on disk, so one task per ~12.5k replayed rows).
 REPLAY_BYTES_PER_STATE_TASK = 256_000
 
 
-def replay_state_bytes_partitions(
-    n_bytes: int, bytes_per_task: int = REPLAY_BYTES_PER_STATE_TASK
-) -> int:
-    """``replay_state_partitions`` sized from on-disk input bytes —
-    callers get the partition count from driver-side file metadata
-    (os.stat) instead of paying a count() job per replay. Same floor
-    and linear growth; see the rows variant for the state-store
-    rationale."""
-    return max(2, -(-int(n_bytes) // int(bytes_per_task)))
-
-
-def replay_state_partitions(
-    n_rows: int, rows_per_task: int = REPLAY_ROWS_PER_STATE_TASK
-) -> int:
-    """Scale-adaptive shuffle/state-partition count for a bounded
-    replay: one state task per ~``rows_per_task`` replayed rows,
-    floor 2 (so multi-partition state semantics stay exercised even
-    at the smallest fixtures). Streaming state stores are created one
+def replay_state_bytes_partitions(n_bytes: int, cap: int) -> int:
+    """Shuffle/state-partition count for a bounded replay, sized from
+    its on-disk input bytes (driver-side file metadata, no count() job):
+    one state task per ``REPLAY_BYTES_PER_STATE_TASK`` bytes, floor 2 (so
+    multi-partition state semantics stay exercised even at the smallest
+    fixtures), at most ``cap``. Streaming state stores are created one
     per shuffle partition at the first micro-batch and never coalesce
-    (AQE is off in stateful workloads), so a partition count sized for
-    a cluster makes a bounded replay pay that many state-store commits
-    PER micro-batch regardless of data: the r13 profile measured the
-    sf0.1 throttle replay at 12.6 s with 32 state partitions and 5.0 s
-    with 8, identical output. At a 100 TB replay the same rule yields
-    thousands of state tasks — it scales with input, not with the
-    local core count."""
-    return max(2, -(-int(n_rows) // int(rows_per_task)))
+    (AQE is off in stateful workloads), so a partition count sized for a
+    cluster makes a bounded replay pay that many state-store commits PER
+    micro-batch regardless of data: the r13 profile measured the sf0.1
+    throttle replay at 12.6 s with 32 state partitions and 5.0 s with 8,
+    identical output. The count grows linearly with input up to ``cap``
+    (callers pass a multiple of the cluster's parallelism), so a 1 TB
+    replay gets a cluster-sized state fan-out, not millions of stores."""
+    return min(cap, max(2, -(-int(n_bytes) // REPLAY_BYTES_PER_STATE_TASK)))
 
 
 def run_to_memory_sink(
@@ -310,7 +297,7 @@ def run_to_memory_sink(
 
     ``shuffle_partitions`` (optional) pins the stream's state-store
     partition count for the run — set it from
-    ``replay_state_partitions(n_rows)`` so the replay's state fan-out
+    ``replay_state_bytes_partitions`` so the replay's state fan-out
     tracks its input size; the session conf is restored afterwards
     (the count is locked into the query's own checkpoint at the first
     micro-batch, so restoring cannot affect the running query).

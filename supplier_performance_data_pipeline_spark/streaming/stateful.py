@@ -294,21 +294,25 @@ def batch_throttle(events: DataFrame, quiet_seconds: int) -> DataFrame:
     quiet_us = quiet_seconds * 1_000_000
 
     def run(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            outs = []
-            for _, g in pdf.groupby("user_id", sort=False):
-                kept, _last = _throttle_core(g, None, quiet_us)
-                outs.append(kept[["user_id", "event_id", "ts_us"]])
-            o = pd.concat(outs, ignore_index=True)
-            yield pd.DataFrame(
-                {
-                    "user_id": o["user_id"].astype("int64"),
-                    "event_id": o["event_id"].astype("int64"),
-                    "ts_us": o["ts_us"].astype("int64"),
-                }
-            )
+        # The partition arrives as Arrow batches of at most
+        # ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, and one
+        # user's history can span batches: scan the whole partition.
+        pdfs = [pdf for pdf in it if len(pdf)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        outs = []
+        for _, g in pdf.groupby("user_id", sort=False):
+            kept, _last = _throttle_core(g, None, quiet_us)
+            outs.append(kept[["user_id", "event_id", "ts_us"]])
+        o = pd.concat(outs, ignore_index=True)
+        yield pd.DataFrame(
+            {
+                "user_id": o["user_id"].astype("int64"),
+                "event_id": o["event_id"].astype("int64"),
+                "ts_us": o["ts_us"].astype("int64"),
+            }
+        )
 
     prepped = _throttle_prepped(events)
     return prepped.repartition(F.col("user_id")).mapInPandas(

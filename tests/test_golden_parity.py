@@ -99,7 +99,7 @@ def test_risk_summary_matches_reference_warehouse(spark):
         t["suppliers"], t["purchase_orders"], t["deliveries"]
     )
     actual = (
-        supplier_risk_summary(kpis, cache=False)
+        supplier_risk_summary(kpis)
         .select(*SUPPLIER_RISK_COLUMNS)
         .toPandas()
     )

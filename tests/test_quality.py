@@ -1,0 +1,50 @@
+"""Fault injection for the nightly load's integrity assertions: each
+fault fails with an error naming the key or label and the count, and
+clean input passes."""
+
+from __future__ import annotations
+
+import pytest
+
+from supplier_performance_data_pipeline_spark.operators.quality import (
+    assert_referential_integrity,
+    assert_unique_key,
+)
+
+
+def _keys(spark, *ids):
+    return spark.createDataFrame([(i,) for i in ids], "po_id string")
+
+
+def test_unique_key_passes_clean_input(spark):
+    assert_unique_key(_keys(spark, "a", "b", "c"), "po_id")
+
+
+def test_unique_key_rejects_duplicate(spark):
+    with pytest.raises(AssertionError, match=r"'po_id'.*rows=3 nonnull=3 distinct=2"):
+        assert_unique_key(_keys(spark, "a", "b", "b"), "po_id")
+
+
+def test_unique_key_rejects_null(spark):
+    with pytest.raises(AssertionError, match=r"'po_id'.*rows=3 nonnull=2 distinct=2"):
+        assert_unique_key(_keys(spark, "a", None, "c"), "po_id")
+
+
+def test_referential_integrity_passes_clean_input(spark):
+    po, dl = _keys(spark, "a", "b"), _keys(spark, "b", "a")
+    assert_referential_integrity(po, dl, "po_id", "po->delivery")
+    assert_referential_integrity(dl, po, "po_id", "delivery->po")
+
+
+def test_referential_integrity_rejects_po_without_delivery(spark):
+    po, dl = _keys(spark, "a", "b", "c", "d"), _keys(spark, "a", "b")
+    with pytest.raises(AssertionError, match=r"po->delivery: 2 orphans"):
+        assert_referential_integrity(po, dl, "po_id", "po->delivery")
+    assert_referential_integrity(dl, po, "po_id", "delivery->po")
+
+
+def test_referential_integrity_rejects_delivery_without_po(spark):
+    po, dl = _keys(spark, "a"), _keys(spark, "a", "z")
+    assert_referential_integrity(po, dl, "po_id", "po->delivery")
+    with pytest.raises(AssertionError, match=r"delivery->po: 1 orphans"):
+        assert_referential_integrity(dl, po, "po_id", "delivery->po")

@@ -126,3 +126,27 @@ def test_streaming_throttle_equals_batch_across_microbatches(spark, tmp_path):
     assert got == want
     # sanity: throttling actually suppressed rows and kept mid-burst ones
     assert (1, 103) in want and (1, 101) not in want
+
+
+def test_batch_throttle_scans_a_user_across_arrow_batches(spark):
+    """One user's history split over several Arrow batches of one
+    partition must be throttled as one sequence, not restarted per
+    batch."""
+    import datetime as dt
+
+    from supplier_performance_data_pipeline_spark.streaming.stateful import (
+        batch_throttle,
+    )
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [(1, i, base + dt.timedelta(seconds=10 * i)) for i in range(12)]
+    df = spark.createDataFrame(rows, "user_id long, event_id long, ts timestamp")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        kept = sorted(r.event_id for r in batch_throttle(df, 25).collect())
+    finally:
+        spark.conf.set(key, prev)
+    # quiet=25s over events every 10s keeps every third event
+    assert kept == [0, 3, 6, 9]

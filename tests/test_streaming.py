@@ -7,9 +7,14 @@ import pandas as pd
 import pytest
 
 from supplier_performance_data_pipeline_spark.operators.windows import hourly_rollup
+from supplier_performance_data_pipeline_spark.plans.queries_events import (
+    _input_bytes,
+)
 from supplier_performance_data_pipeline_spark.streaming.events import (
+    REPLAY_BYTES_PER_STATE_TASK,
     normalize_event_ts,
     read_event_stream,
+    replay_state_bytes_partitions,
     run_to_memory_sink,
     streaming_hourly_rollup,
     streaming_sessionize,
@@ -163,3 +168,35 @@ def test_run_to_memory_sink_stops_query_when_conf_restore_raises(spark, monkeypa
         spark.conf.set(key, prev)
     assert sets == ["2", prev]
     assert spark.streams.active == []
+
+
+def test_replay_state_partitions_floor_growth_and_cap():
+    per = REPLAY_BYTES_PER_STATE_TASK
+    # Floor 2, even for an empty or tiny replay.
+    assert replay_state_bytes_partitions(0, cap=16) == 2
+    assert replay_state_bytes_partitions(per, cap=16) == 2
+    # One task per started bytes_per_task above the floor.
+    assert replay_state_bytes_partitions(3 * per, cap=16) == 3
+    assert replay_state_bytes_partitions(3 * per + 1, cap=16) == 4
+    assert replay_state_bytes_partitions(16 * per, cap=16) == 16
+    # Capped: a huge replay gets the cluster-sized count, not millions.
+    assert replay_state_bytes_partitions(17 * per, cap=16) == 16
+    assert replay_state_bytes_partitions(10**12, cap=16) == 16
+
+
+def test_input_bytes_matches_os_walk_on_written_parquet(spark, tmp_path):
+    import os
+
+    path = str(tmp_path / "ev")
+    spark.range(5000).selectExpr("id", "id % 7 AS g").write.partitionBy(
+        "g"
+    ).parquet(path)
+    want = sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    )
+    assert want > 0
+    assert _input_bytes(spark, path) == want
+    assert _input_bytes(spark, EVENTS_PATH) == os.path.getsize(EVENTS_PATH)
