@@ -1,38 +1,49 @@
 """Distributed k-means over embedding columns (Lloyd's algorithm).
 
 Training-data pipelines cluster embeddings for curation (SemDedup-style
-pruning, stratified sampling, IVF coarse quantizers). This is Lloyd's
-algorithm expressed as pure DataFrame ops — no UDF, no driver-side
-data, one lazy plan for a fixed iteration count — in ARRAY form:
+pruning, stratified sampling, IVF coarse quantizers, PQ codebooks).
+This is Lloyd's algorithm expressed as pure DataFrame ops — no UDF, no
+driver-side data, one lazy plan for a fixed iteration count — as ONE
+chain keyed by (sub, cluster) over a (vec_id, sub, v) table:
 
+  input: plain k-means is the one-subspace table (``_one_sub``: sub = 0,
+    v the whole vector); product quantization explodes every vector
+    into m slices (``_explode_subs``), so its m codebooks train as one
+    run instead of m.
   per iteration:
-    assignment = a PROJECTION: every row scores all K centroids from a
-      broadcast 1-row centroid table (the risk-bounds crossJoin shape)
-      and takes array_min over (distance, cluster) structs — argmin
-      with the tie-break for free, zero shuffle;
-    update     = ONE hash agg keyed by cluster: 64 per-dimension
+    assignment = a PROJECTION: every row scores all K centroids of its
+      own subspace from a broadcast per-sub centroid array and takes
+      array_min over (distance, cluster) structs — argmin with the
+      tie-break for free, zero shuffle on the vector table. With a
+      literal sub = 0 the attach plans as the broadcast nested loop of
+      one row (the risk-bounds shape);
+    update     = ONE hash agg keyed by (sub, cluster): per-dimension
       DECIMAL sums + a count, rebuilt into centroid arrays.
 
-  Total shuffles for I iterations: I updates + the final profile agg —
-  each over K-keyed partial-aggregated rows. The earlier long-format
-  design (explode to (vec_id, dim, v), join per iteration) moved N×64
-  rows through ~3 exchanges per iteration; this one moves N rows
-  through none and K rows through one.
+  Total shuffles for I iterations: I updates + I per-sub centroid
+  collapses, each over partial-aggregated (sub, cluster) rows — the
+  vector table never crosses an exchange.
 
 Determinism contract (the DuckDB oracle reproduces every iteration
 bit-for-bit):
-- per-row distance is a left-to-right DOUBLE fold over dimensions
-  (zip_with + aggregate) — the same fold the ANN/cosine oracles rely
-  on, bit-identical to DuckDB's list_sum(list_transform(...));
+- per-row distance is ``similarity.sq_dist_expr``: a left-to-right
+  DOUBLE fold over dimensions, the same fold every ANN/cosine oracle
+  relies on, bit-identical to DuckDB's list_sum(list_transform(...));
 - every CROSS-ROW sum is DECIMAL (exact, order-free): the per-dim
-  centroid sums and the inertia sum of row distances.
-Initial centroids are the first K vectors (vec_id < K).
+  centroid sums and the inertia sum of row distances. The extra
+  ``sub`` key changes neither group membership nor order-free DECIMAL
+  addition, so every subspace gets exactly the values of its own run.
+Seeding (``_lloyd_cents``): ``"first"`` takes vec_id < K as the
+initial centroids with cluster = vec_id; ``"rank"`` takes the K lowest
+vec_ids of the training set renumbered 0..K-1.
+
+IVF-PQ builds on the same chain with one frozen-codebook encode
+(``_encode_codes``) and one asymmetric-distance tail (``_adc_topk``).
 
 Scale: N rows stream through whole-stage-codegen projections; the only
-shuffled data is K×(64+1) aggregate cells per iteration. Centroid
-tables are one broadcast row. For many iterations at 100 TB you'd
-checkpoint the assignment between iterations to cut lineage; the
-fixed-iteration plan here keeps the whole thing lazy.
+shuffled data is m×K×(dim+1) aggregate cells per iteration. Trained
+codebooks are tiny (m×K rows), so the IVF-PQ callers localCheckpoint
+them once and every downstream read is free.
 """
 
 from __future__ import annotations
@@ -45,6 +56,10 @@ import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from supplier_performance_data_pipeline_spark.operators.similarity import (
+    sq_dist_expr,
+)
 
 K_DEFAULT = 4
 ITERS_DEFAULT = 2
@@ -70,87 +85,13 @@ def spread_for_fanout(df: DataFrame, *keys: str) -> DataFrame:
     )
 
     return spread_scan(df, *keys)
+
+
 # Row distance (≤ dim × O(1) squares) cast to DECIMAL(24,12) before the
 # cross-row inertia sum; per-dim components round to DECIMAL(20,10)
 # before the centroid sums.
 DIST_DEC = "decimal(24,12)"
 COMP_DEC = "decimal(20,10)"
-
-# Left-to-right double fold — mirrors the oracle's list_sum exactly.
-_DIST_SQL = (
-    "aggregate(zip_with(v, {cv}, (x, y) -> (x - y) * (x - y)), "
-    "0.0D, (acc, x) -> acc + x)"
-)
-
-
-def _assign(base: DataFrame, cents_1row: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment as a projection: (vec_id, v, cluster, d).
-
-    ``cents_1row`` is a single row holding array<struct<cluster, cv>>;
-    broadcast-crossJoined onto every vector row (never a cartesian —
-    the same 1-row broadcast shape as the risk bounds). argmin is
-    array_min over (d, cluster) structs: lexicographic struct ordering
-    gives the lowest-cluster tie-break for free.
-    """
-    with_c = base.crossJoin(F.broadcast(cents_1row))
-    m = F.expr(
-        "array_min(transform(cents, s -> struct("
-        + _DIST_SQL.format(cv="s.cv")
-        + " AS d, s.cluster AS cluster)))"
-    )
-    return with_c.select(
-        "vec_id", "v", m["cluster"].alias("cluster"), m["d"].alias("d")
-    )
-
-
-def _update(assigned: DataFrame, dim: int) -> DataFrame:
-    """Centroid update: ONE cluster-keyed agg of 64 exact DECIMAL sums
-    (order-free) + count, divided back into a double centroid array.
-    expr strings, not Column loops — 64 aggregates as Column-API calls
-    cost a py4j round trip each at plan-build time."""
-    upd = assigned.groupBy("cluster").agg(
-        F.expr("count(*) AS cnt"),
-        *[
-            F.expr(f"sum(cast(v[{i}] AS {COMP_DEC})) AS s{i}")
-            for i in range(dim)
-        ],
-    )
-    cv = "array(" + ", ".join(f"double(s{i}) / cnt" for i in range(dim)) + ")"
-    return upd.select("cluster", F.expr(cv).alias("cv"))
-
-
-def _to_1row(cent: DataFrame) -> DataFrame:
-    """Collapse the K-row centroid table to one broadcastable row.
-    collect_list order is nondeterministic and irrelevant: array_min
-    in the assignment is commutative over the struct array."""
-    return cent.groupBy().agg(
-        F.collect_list(F.struct("cluster", "cv")).alias("cents")
-    )
-
-
-# --- fused multi-subspace Lloyd's (r13 optimization) -------------------------
-#
-# PQ trains m independent k-means, one per subspace. Expressed as m
-# separate lazy chains (the r5-r12 shape) each chain contributes
-# iters x (update agg + centroid collapse + broadcast) AQE stages to
-# the final plan, and every consumer of a chain's centroids (the
-# full-table encode, the query LUT, the persisted centroid table)
-# re-embeds — and re-EXECUTES — the whole chain. At sf0.1 the r13
-# profile measured the IVF-PQ queries at 58-249 Spark jobs apiece,
-# nearly all 1-task stages: pure scheduler overhead (guide §1/§2.4).
-#
-# The fused form keys ONE chain by (sub, cluster) over the exploded
-# (vec_id, sub, subvector) table: per iteration exactly one
-# (sub, cluster)-keyed update agg, one per-sub centroid collapse and
-# one broadcast — m x fewer exchanges, and the trained (sub, cluster,
-# cv) table is tiny (m*k rows) so callers localCheckpoint it once and
-# every downstream read is free. Per-subspace arithmetic is
-# BIT-IDENTICAL to the m-chain form: the same rows fold through the
-# same left-to-right double distance and the same per-(sub, cluster)
-# DECIMAL sums — grouping by an extra key changes neither membership
-# nor order-free DECIMAL addition, and seeding selects the same k
-# rows per sub (proven by the unchanged DuckDB oracles of all eight
-# registered IVF-PQ queries).
 
 
 def _run_concurrent(*thunks):
@@ -191,7 +132,7 @@ def _explode_subs(
     df: DataFrame, m: int, d_sub: int, id_col: str = "vec_id"
 ) -> DataFrame:
     """(id, v) -> (id, sub, v): one row per PQ subspace, v sliced to
-    that subspace — the long-format input of the fused Lloyd's."""
+    that subspace — the m-subspace input of the Lloyd chain."""
     return df.select(
         id_col,
         F.explode(
@@ -210,22 +151,34 @@ def _explode_subs(
     ).select(id_col, F.col("sv.sub").alias("sub"), F.col("sv.v").alias("v"))
 
 
+def _one_sub(df: DataFrame) -> DataFrame:
+    """(vec_id, v) -> (vec_id, sub = 0, v): the one-subspace input of
+    the Lloyd chain for single-space k-means. The literal ``sub`` lets
+    Spark fold the per-sub centroid attach into a one-row broadcast
+    nested loop."""
+    return df.select("vec_id", F.lit(0).alias("sub"), "v")
+
+
 def _to_persub(cent: DataFrame) -> DataFrame:
-    """(sub, cluster, cv) -> (sub, cents): per-sub broadcastable
-    centroid arrays — the multi-subspace twin of ``_to_1row``."""
+    """(sub, cluster, cv) -> (sub, cents): one broadcastable centroid
+    array per subspace. collect_list order is nondeterministic and
+    irrelevant: array_min in the assignment is commutative over the
+    struct array."""
     return cent.groupBy("sub").agg(
         F.collect_list(F.struct("cluster", "cv")).alias("cents")
     )
 
 
-def _assign_multi(base_sub: DataFrame, cents_persub: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment per (row, sub): broadcast equi-join
-    on ``sub`` (each row sees only its own subspace's codebook), then
-    the same argmin-over-structs projection as ``_assign``."""
+def _assign(base_sub: DataFrame, cents_persub: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment per (row, sub) as a projection:
+    (vec_id, sub, v, cluster, d). A broadcast equi-join on ``sub``
+    hands each row only its own subspace's codebook; argmin is
+    array_min over (d, cluster) structs — lexicographic struct
+    ordering gives the lowest-cluster tie-break for free."""
     with_c = base_sub.join(F.broadcast(cents_persub), "sub")
     mexp = F.expr(
         "array_min(transform(cents, s -> struct("
-        + _DIST_SQL.format(cv="s.cv")
+        + sq_dist_expr("v", "s.cv")
         + " AS d, s.cluster AS cluster)))"
     )
     return with_c.select(
@@ -237,9 +190,11 @@ def _assign_multi(base_sub: DataFrame, cents_persub: DataFrame) -> DataFrame:
     )
 
 
-def _update_multi(assigned: DataFrame, dim: int) -> DataFrame:
-    """Centroid update keyed by (sub, cluster): ONE hash agg for all m
-    subspaces — the same per-group DECIMAL sums as ``_update``."""
+def _update(assigned: DataFrame, dim: int) -> DataFrame:
+    """Centroid update: ONE (sub, cluster)-keyed agg of ``dim`` exact
+    DECIMAL sums (order-free) + count, divided back into a double
+    centroid array. expr strings, not Column loops — 64 aggregates as
+    Column-API calls cost a py4j round trip each at plan-build time."""
     upd = assigned.groupBy("sub", "cluster").agg(
         F.expr("count(*) AS cnt"),
         *[
@@ -251,15 +206,18 @@ def _update_multi(assigned: DataFrame, dim: int) -> DataFrame:
     return upd.select("sub", "cluster", F.expr(cv).alias("cv"))
 
 
-def _lloyd_multi_cents(
+def _lloyd_cents(
     base_sub: DataFrame, k: int, iters: int, dim: int, seed: str = "first"
 ) -> DataFrame:
-    """Fused Lloyd training over (vec_id, sub, v): final (sub, cluster,
-    cv) after ``iters`` update rounds. ``seed="first"`` takes vec_id <
-    k per sub with cluster = vec_id (the ``_lloyd_with_cents``
-    contract); ``seed="rank"`` takes the k lowest vec_ids per sub
-    renumbered 0..k-1 (the ``_lloyd_train_cents`` contract — a
-    PARTITIONED window here, since each sub sees the same id set)."""
+    """Lloyd training over (vec_id, sub, v): the final (sub, cluster,
+    cv) after ``iters`` update rounds.
+
+    ``seed="first"`` takes vec_id < k per sub with cluster = vec_id.
+    ``seed="rank"`` takes the k lowest vec_ids renumbered 0..k-1 — the
+    deterministic "first k of a training sample" under any sample
+    predicate. Every sub carries the same ids, so the k seed ids come
+    from one top-k over sub 0 (per-partition top-k, never a sort of
+    the whole training set) and join back per sub."""
     if seed == "first":
         cent = base_sub.filter(F.col("vec_id") < k).select(
             "sub", F.col("vec_id").alias("cluster"), F.col("v").alias("cv")
@@ -267,18 +225,23 @@ def _lloyd_multi_cents(
     else:
         from pyspark.sql.window import Window
 
-        w = Window.partitionBy("sub").orderBy("vec_id")
-        cent = (
-            base_sub.select("sub", "v", F.row_number().over(w).alias("rn"))
-            .filter(F.col("rn") <= k)
+        seeds = (
+            base_sub.filter(F.col("sub") == 0)
+            .select("vec_id")
+            .orderBy("vec_id")
+            .limit(k)
             .select(
-                "sub",
-                (F.col("rn") - 1).alias("cluster"),
-                F.col("v").alias("cv"),
+                "vec_id",
+                (F.row_number().over(Window.orderBy("vec_id")) - 1).alias(
+                    "cluster"
+                ),
             )
         )
+        cent = base_sub.join(F.broadcast(seeds), "vec_id").select(
+            "sub", "cluster", F.col("v").alias("cv")
+        )
     for _ in range(iters):
-        cent = _update_multi(_assign_multi(base_sub, _to_persub(cent)), dim)
+        cent = _update(_assign(base_sub, _to_persub(cent)), dim)
     return cent
 
 
@@ -297,32 +260,9 @@ def kmeans_assignments(
     # persist: same in-memory reuse, but the checkpointed RDD is
     # GC-cleaned when the plan is dropped instead of occupying the cache
     # manager until someone remembers to unpersist).
-    base = _decoded_base(emb, id_col, vec_col)
-    return _lloyd_from_base(base, k, iters, dim)
-
-
-def _lloyd_from_base(base: DataFrame, k: int, iters: int, dim: int) -> DataFrame:
-    """Lloyd iterations over an already-decoded (vec_id, v) table —
-    shared by ``kmeans_assignments`` (which checkpoints the decode) and
-    ``pq_encode`` (which checkpoints ONCE and slices lazily per
-    subspace, instead of paying one eager decode job per subspace)."""
-    return _lloyd_with_cents(base, k, iters, dim)[0]
-
-
-def _lloyd_with_cents(
-    base: DataFrame, k: int, iters: int, dim: int
-) -> tuple[DataFrame, DataFrame]:
-    """Lloyd iterations returning BOTH the final assignment table and
-    the final centroid table (cluster, cv) — ADC queries need the
-    codebook itself, not just each vector's code."""
-    cent = base.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cluster"), F.col("v").alias("cv")
-    )
-    assign = _assign(base, _to_1row(cent))
-    for _ in range(iters):
-        cent = _update(assign, dim)
-        assign = _assign(base, _to_1row(cent))
-    return assign, cent
+    base = _one_sub(_decoded_base(emb, id_col, vec_col))
+    cent = _lloyd_cents(base, k, iters, dim)
+    return _assign(base, _to_persub(cent)).select("vec_id", "cluster", "d")
 
 
 def kmeans_cluster_profile(
@@ -356,7 +296,7 @@ def pq_encode(
 ) -> DataFrame:
     """Product quantization (Jégou et al., PAMI '11): split each
     vector into ``m`` subvectors of dim/m, k-means each subspace
-    independently (the SAME deterministic Lloyd's above — first-k
+    independently (the SAME deterministic Lloyd chain above — first-k
     seeding, DECIMAL-exact updates, so codes are reproducible across
     engines and partitionings), and encode every vector as its m
     nearest-subcentroid ids — dim floats compress to m small ints
@@ -368,23 +308,17 @@ def pq_encode(
     double sum of the m subspace squared distances — the
     reconstruction error of the codeword).
 
-    Plan: the full vectors decode and localCheckpoint ONCE (one eager
-    job — calling kmeans_assignments per subspace would instead pay m
-    sequential decode-and-checkpoint jobs, each re-scanning the
-    source); every subspace then slices that materialized base with a
-    lazy projection and runs Lloyd's I aggregate rounds; the m
-    assignment tables (vec-sized, 3 columns) union and fold back to
-    one row per vector with a single vec_id-keyed aggregate."""
+    Plan: the full vectors decode and localCheckpoint ONCE; a lazy
+    explode slices every vector into its m subvectors and ONE
+    (sub, cluster)-keyed Lloyd chain trains all m codebooks; the final
+    (vec_id, sub) assignment folds back to one row per vector with a
+    single vec_id-keyed aggregate."""
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d_sub = dim // m
-    base = _decoded_base(emb, id_col, vec_col)
-    # Fused multi-subspace Lloyd's (r13): one (sub, cluster)-keyed
-    # chain over the exploded table instead of m separate chains —
-    # identical per-subspace arithmetic, m x fewer exchanges.
-    bsub = _explode_subs(base, m, d_sub)
-    cent = _lloyd_multi_cents(bsub, k, iters, d_sub, seed="first")
-    allsub = _assign_multi(bsub, _to_persub(cent)).select(
+    bsub = _explode_subs(_decoded_base(emb, id_col, vec_col), m, d_sub)
+    cent = _lloyd_cents(bsub, k, iters, d_sub)
+    allsub = _assign(bsub, _to_persub(cent)).select(
         "vec_id",
         "sub",
         F.col("cluster").cast("int").alias("code"),
@@ -401,31 +335,71 @@ def pq_encode(
     )
 
 
-def _lloyd_train_cents(
-    samp: DataFrame, k: int, iters: int, dim: int
+def _ivf_candidates(
+    qc: DataFrame, coarse: DataFrame, bsub: DataFrame, cent: DataFrame
 ) -> DataFrame:
-    """Train-only Lloyd's: final (cluster, cv) centroid table from a
-    (vec_id, v) TRAINING SET, never assigning anything outside it.
+    """(query_id, vec_id, sub, code) for every vector in a query's
+    probed inverted lists: the IVF equi-join of the query lists ``qc``
+    (query_id, qcl) onto the coarse assignment (vec_id, cluster), then
+    each candidate's m PQ codes against the frozen (sub, cluster, cv)
+    codebook. ``qc`` holds at most n_queries × n_probe rows and is
+    broadcast explicitly: the checkpointed coarse assignment carries
+    the Lloyd chain's multiplied join-size estimate, which would
+    otherwise price both sides as huge and plan a sort-merge join."""
+    cand = (
+        F.broadcast(qc)
+        .join(coarse, F.col("qcl") == F.col("cluster"))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id")
+    )
+    codes = _assign(bsub, _to_persub(cent)).select(
+        "vec_id", "sub", F.col("cluster").alias("code")
+    )
+    return cand.join(codes, "vec_id")
 
-    Seeds are the k lowest-vec_id training rows renumbered 0..k-1 (the
-    sampled twin of the first-k seeding above — "first k of the sample"
-    stays deterministic under any sample predicate). ``iters`` update
-    rounds; the caller freezes the returned centroids and encodes the
-    full table as a broadcast-argmin projection."""
+
+def _adc_topk(
+    cand_sub: DataFrame,
+    queries: DataFrame,
+    cent: DataFrame,
+    m: int,
+    d_sub: int,
+    topk: int,
+) -> DataFrame:
+    """Asymmetric distance top-k over (query_id, vec_id, sub, code)
+    candidates: the query subvectors (from ``queries`` (query_id, v))
+    meet the (sub, cluster, cv) codebook in ONE (query_id, sub, code)
+    lookup table, broadcast-equi-joined onto the candidates; the m
+    partial distances cast to DECIMAL before the per-(query_id, vec_id)
+    sum (order-free), so the (adc, vec_id) ranking is total and
+    engine-independent. Output: (query_id, rank, neighbor_id,
+    adc_dist)."""
     from pyspark.sql.window import Window
 
-    w = Window.orderBy("vec_id")
-    cent = (
-        samp.orderBy("vec_id")
-        .limit(k)
+    qsub = _explode_subs(
+        queries, m, d_sub, id_col="query_id"
+    ).withColumnRenamed("v", "qv")
+    lut = qsub.join(cent, "sub").select(
+        "query_id",
+        "sub",
+        F.col("cluster").alias("code"),
+        F.expr(sq_dist_expr("qv", "cv")).alias("pd"),
+    )
+    allp = cand_sub.join(
+        F.broadcast(lut), ["query_id", "sub", "code"]
+    ).select("query_id", "vec_id", F.col("pd").cast(DIST_DEC).alias("pd"))
+    adc = allp.groupBy("query_id", "vec_id").agg(F.sum("pd").alias("adc"))
+    w = Window.partitionBy("query_id").orderBy("adc", "vec_id")
+    return (
+        adc.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
         .select(
-            (F.row_number().over(w) - 1).alias("cluster"),
-            F.col("v").alias("cv"),
+            "query_id",
+            F.col("rank").cast("int").alias("rank"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
         )
     )
-    for _ in range(iters):
-        cent = _update(_assign(samp, _to_1row(cent)), dim)
-    return cent
 
 
 def ivfpq_adc_topk_sampled(
@@ -452,17 +426,18 @@ def ivfpq_adc_topk_sampled(
 
       1. coarse ENCODING — one broadcast-argmin projection of every
          vector against the frozen k_coarse centroids;
-      2. PQ ENCODING — m broadcast-argmin projections against the
-         frozen subspace codebooks;
+      2. PQ ENCODING — one broadcast-argmin projection per (vector,
+         subspace) against the frozen subspace codebooks;
       3. the ADC candidate join itself (codes ⋈ broadcast LUT).
 
     Centroid-update aggregations therefore see only sample-sized
     inputs; at 100 TB the training chain is a rounding error and the
     full-table cost is the same single encode+join pass a production
     index build pays. Training determinism: seeds are the k lowest
-    vec_ids IN THE SAMPLE renumbered 0..k-1; everything downstream is
-    the engine's standard deterministic Lloyd's/ADC contract, so the
-    DuckDB oracle unrolls the identical sampled chain."""
+    vec_ids IN THE SAMPLE renumbered 0..k-1 (``seed="rank"``);
+    everything downstream is the engine's standard deterministic
+    Lloyd's/ADC contract, so the DuckDB oracle unrolls the identical
+    sampled chain."""
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     from supplier_performance_data_pipeline_spark.operators.sampling import (
@@ -474,107 +449,106 @@ def ivfpq_adc_topk_sampled(
     samp = base.filter(
         md5_mod(F.col("vec_id"), sample_salt, sample_mod) < sample_thr
     )
+
     # localCheckpoint the trained coarse codebook (k_coarse rows): it
     # feeds the full-table encode AND the multiprobe query ranking —
     # without it each consumer re-executes the whole training chain
     # (r13 profile: the chains, not the data, were the cost). The
-    # coarse arm (train + frozen full-table encode) and the fused PQ
+    # coarse arm (train + frozen full-table encode) and the PQ
     # training are independent: concurrent driver threads (guide §2.6).
     def _coarse_arm():
-        cc = _lloyd_train_cents(samp, k_coarse, iters, dim).localCheckpoint()
+        cc = _lloyd_cents(
+            _one_sub(samp), k_coarse, iters, dim, seed="rank"
+        ).localCheckpoint()
         # Frozen-codebook encode of the FULL table: a projection, not
         # a training pass. localCheckpoint: it feeds both IVF join
         # sides.
         enc = (
-            _assign(base, _to_1row(cc))
+            _assign(_one_sub(base), _to_persub(cc))
             .select("vec_id", "cluster")
             .localCheckpoint()
         )
         return cc, enc
 
-    samp_sub = _explode_subs(samp, m, d_sub)
     (coarse_cent, coarse), cent = _run_concurrent(
         _coarse_arm,
-        lambda: _lloyd_multi_cents(
-            samp_sub, k_pq, iters, d_sub, seed="rank"
+        lambda: _lloyd_cents(
+            _explode_subs(samp, m, d_sub), k_pq, iters, d_sub, seed="rank"
         ).localCheckpoint(),
     )
-    qbase = base.filter(F.col("vec_id") < n_queries)
+    queries = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), "v"
+    )
     if n_probe <= 1:
         qc = coarse.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"), F.col("cluster").alias("qcl")
         )
     else:
-        from pyspark.sql.window import Window as _W
+        from pyspark.sql.window import Window
 
-        qd = qbase.crossJoin(F.broadcast(coarse_cent)).select(
-            F.col("vec_id").alias("query_id"),
-            "cluster",
-            F.expr(_DIST_SQL.format(cv="cv")).alias("d"),
+        qd = queries.crossJoin(F.broadcast(coarse_cent)).select(
+            "query_id", "cluster", F.expr(sq_dist_expr("v", "cv")).alias("d")
         )
-        wp = _W.partitionBy("query_id").orderBy("d", "cluster")
+        wp = Window.partitionBy("query_id").orderBy("d", "cluster")
         qc = (
             qd.withColumn("rn", F.row_number().over(wp))
             .filter(F.col("rn") <= n_probe)
             .select("query_id", F.col("cluster").alias("qcl"))
         )
-    cand = (
-        qc.join(coarse, F.col("qcl") == F.col("cluster"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    lut_pd = F.expr(
-        "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-    # Fused multi-subspace path (r13): the (sub, cluster)-keyed PQ
-    # codebook trained above (seed = k lowest sample ids per sub,
-    # renumbered — the `_lloyd_train_cents` contract) drives the
-    # full-table PQ encode and the LUT as single equi-joins.
-    codes = _assign_multi(_explode_subs(base, m, d_sub), _to_persub(cent)).select(
-        "vec_id", "sub", F.col("cluster").alias("code")
-    )
-    qsub = _explode_subs(
-        qbase.select(F.col("vec_id").alias("query_id"), "v"),
-        m,
-        d_sub,
-        id_col="query_id",
-    ).withColumnRenamed("v", "qv")
-    lut = qsub.join(cent, "sub").select(
-        "query_id", "sub", F.col("cluster").alias("code"), lut_pd.alias("pd")
-    )
-    allp = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .select("query_id", "vec_id", F.col("pd").cast(DIST_DEC).alias("pd"))
-    )
-    adc = allp.groupBy("query_id", "vec_id").agg(F.sum("pd").alias("adc"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
-        )
-    )
+    cand_sub = _ivf_candidates(qc, coarse, _explode_subs(base, m, d_sub), cent)
+    return _adc_topk(cand_sub, queries, cent, m, d_sub, topk)
 
 
 def _subspace_code_expr(cents_col: str, off: int, d_sub: int) -> F.Column:
-    """Nearest-subcentroid id for v[off+1 .. off+d_sub] against a
+    """Nearest-centroid id for v[off+1 .. off+d_sub] against a
     broadcast centroid array column — the same argmin-over-structs
     shape as ``_assign``, inlined so ALL subspace codes (and the
     coarse code) come out of ONE projection instead of m joins."""
     return F.expr(
         f"array_min(transform({cents_col}, c -> struct("
-        f"aggregate(zip_with(slice(v, {off + 1}, {d_sub}), c.cv, "
-        "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x) AS d, "
+        f"{sq_dist_expr(f'slice(v, {off + 1}, {d_sub})', 'c.cv')} AS d, "
         "c.cluster AS cluster)))"
     )["cluster"]
+
+
+def _encode_codes(
+    base: DataFrame,
+    coarse_cent: DataFrame,
+    pq_cent: DataFrame,
+    m: int,
+    dim: int,
+) -> DataFrame:
+    """Frozen-codebook encode of (vec_id, v): (vec_id, coarse,
+    c0..c{m-1}) in ONE projection — no shuffle on the vector table.
+    Each row scores a broadcast row holding the coarse centroids
+    (``co``) and one centroid array per subspace (``ce{s}``); all m
+    per-sub arrays come out of one aggregate of the (sub, cluster, cv)
+    codebook (collect_list skips the non-matching subs' NULLs).
+    Per-subspace codes land as SEPARATE int columns so a serving scan
+    can prune to exactly the columns ADC touches."""
+    d_sub = dim // m
+    co_1row = coarse_cent.groupBy().agg(
+        F.collect_list(F.struct("cluster", "cv")).alias("co")
+    )
+    pq_1row = pq_cent.groupBy().agg(
+        *[
+            F.collect_list(
+                F.when(F.col("sub") == s, F.struct("cluster", "cv"))
+            ).alias(f"ce{s}")
+            for s in range(m)
+        ]
+    )
+    enc = base.crossJoin(F.broadcast(co_1row)).crossJoin(F.broadcast(pq_1row))
+    return enc.select(
+        "vec_id",
+        _subspace_code_expr("co", 0, dim).cast("int").alias("coarse"),
+        *[
+            _subspace_code_expr(f"ce{s}", s * d_sub, d_sub)
+            .cast("int")
+            .alias(f"c{s}")
+            for s in range(m)
+        ],
+    )
 
 
 def ivfpq_index_write(
@@ -601,13 +575,12 @@ def ivfpq_index_write(
 
     Codebooks train on the deterministic md5 sample (frozen, same
     contract as ``ivfpq_adc_topk_sampled``); the full table is then
-    encoded in ONE broadcast-argmin projection producing the coarse
-    code and all m PQ codes per row — zero shuffles on the vector
-    table, and the codes table is the only full-size artifact
-    (m+1 small ints per vector: the 16-64x compressed layout that
-    makes a billion-vector index fit an object store). Per-subspace
-    codes land as SEPARATE int columns so a serving scan can prune to
-    exactly the columns ADC touches.
+    encoded by ``_encode_codes`` — ONE broadcast-argmin projection
+    producing the coarse code and all m PQ codes per row, zero
+    shuffles on the vector table — and the codes table is the only
+    full-size artifact (m+1 small ints per vector: the 16-64x
+    compressed layout that makes a billion-vector index fit an object
+    store).
 
     ``train`` (optional) overrides the training set: codebooks train
     on THIS frame (same ``id_col``/``vec_col`` shape) instead of the
@@ -632,49 +605,26 @@ def ivfpq_index_write(
         samp = base.filter(
             md5_mod(F.col("vec_id"), sample_salt, sample_mod) < sample_thr
         )
-    # r13: train ONCE, serve many — the coarse codebook and the fused
+    # Train ONCE, serve many — the coarse codebook and the
     # (sub, cluster)-keyed PQ codebook both localCheckpoint (k_coarse
     # and m*k_pq rows), so the codes encode, the centroid-table writes
-    # and nothing downstream ever re-executes a training chain (the
-    # r5-r12 lazy form executed each of the 5 chains twice: once under
-    # the codes write's broadcasts, once for its centroid-table write).
-    # The two trainings are independent, so they run as CONCURRENT
+    # and nothing downstream ever re-executes a training chain. The
+    # two trainings are independent, so they run as CONCURRENT
     # driver-thread jobs (guide §2.6): each chain's stages are mostly
     # 1-task scheduler latency, and overlapping them hides one chain
     # behind the other. Results are unaffected — each chain's output
     # is a deterministic function of its own input.
     coarse_cent, pq_cent = _run_concurrent(
-        lambda: _lloyd_train_cents(
-            samp, k_coarse, iters, dim
-        ).localCheckpoint(),
-        lambda: _lloyd_multi_cents(
+        lambda: _lloyd_cents(
+            _one_sub(samp), k_coarse, iters, dim, seed="rank"
+        )
+        .select("cluster", "cv")
+        .localCheckpoint(),
+        lambda: _lloyd_cents(
             _explode_subs(samp, m, d_sub), k_pq, iters, d_sub, seed="rank"
         ).localCheckpoint(),
     )
-    # All m per-sub 1-row centroid arrays come out of ONE aggregate of
-    # the checkpointed codebook (collect_list skips the non-matching
-    # subs' NULLs) instead of m filtered scans + broadcasts.
-    pq_1row = pq_cent.groupBy().agg(
-        *[
-            F.collect_list(
-                F.when(F.col("sub") == s, F.struct("cluster", "cv"))
-            ).alias(f"ce{s}")
-            for s in range(m)
-        ]
-    )
-    enc = base.crossJoin(
-        F.broadcast(_to_1row(coarse_cent).withColumnRenamed("cents", "co"))
-    ).crossJoin(F.broadcast(pq_1row))
-    codes = enc.select(
-        "vec_id",
-        _subspace_code_expr("co", 0, dim).cast("int").alias("coarse"),
-        *[
-            _subspace_code_expr(f"ce{s}", s * d_sub, d_sub)
-            .cast("int")
-            .alias(f"c{s}")
-            for s in range(m)
-        ],
-    )
+    codes = _encode_codes(base, coarse_cent, pq_cent, m, dim)
     # Output file sizing (guide §6): the encode runs wide (spread
     # base), so an AQE rebalance before the write coalesces the tiny
     # local output to one file — and at 100 TB caps files at the
@@ -963,36 +913,16 @@ def ivfpq_index_append(
                 "manifest; pass a fresh name or let segment=None derive one"
             )
         new_max = max(man["max_seq"], _seg_seq(segment))
-    d_sub = dim // m
-    co_cent = spark.read.parquet(os.path.join(path, "coarse_centroids"))
-    pq_cent = spark.read.parquet(os.path.join(path, "pq_centroids"))
     base = new_emb.select(
         F.col(id_col).alias("vec_id"),
         F.expr(f"transform({vec_col}, x -> double(x))").alias("v"),
     )
-    # r13: one aggregate of the stored codebook builds ALL m per-sub
-    # 1-row centroid arrays (collect_list skips non-matching subs'
-    # NULLs) — one scan + one broadcast instead of m of each.
-    pq_1row = pq_cent.groupBy().agg(
-        *[
-            F.collect_list(
-                F.when(F.col("sub") == s, F.struct("cluster", "cv"))
-            ).alias(f"ce{s}")
-            for s in range(m)
-        ]
-    )
-    enc = base.crossJoin(
-        F.broadcast(_to_1row(co_cent).withColumnRenamed("cents", "co"))
-    ).crossJoin(F.broadcast(pq_1row))
-    codes = enc.select(
-        "vec_id",
-        _subspace_code_expr("co", 0, dim).cast("int").alias("coarse"),
-        *[
-            _subspace_code_expr(f"ce{s}", s * d_sub, d_sub)
-            .cast("int")
-            .alias(f"c{s}")
-            for s in range(m)
-        ],
+    codes = _encode_codes(
+        base,
+        spark.read.parquet(os.path.join(path, "coarse_centroids")),
+        spark.read.parquet(os.path.join(path, "pq_centroids")),
+        m,
+        dim,
     )
     # AQE rebalance before the write: batch-sized segment, sized files.
     write_parquet(codes.hint("rebalance"), os.path.join(path, segment))
@@ -1193,66 +1123,37 @@ def ivfpq_adc_from_index(
         )
     co_cent = spark.read.parquet(os.path.join(path, "coarse_centroids"))
     pq_cent = spark.read.parquet(os.path.join(path, "pq_centroids"))
-    d_sub = dim // m
     qc = _assign(
-        queries.select(F.col("query_id").alias("vec_id"), "v"),
-        _to_1row(co_cent),
+        _one_sub(queries.select(F.col("query_id").alias("vec_id"), "v")),
+        _to_persub(co_cent.select(F.lit(0).alias("sub"), "cluster", "cv")),
     ).select(
         F.col("vec_id").alias("query_id"), F.col("cluster").alias("qcl")
     )
-    cand = (
+    # Unpivot the candidate's m stored code columns to (query_id,
+    # vec_id, sub, code) rows, so ADC is ONE equi-join against the
+    # (query_id, sub, code) LUT built from one scan of pq_centroids.
+    cand_sub = (
         qc.join(codes, F.col("qcl") == F.col("coarse"))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            "query_id", "vec_id", *[f"c{s}" for s in range(m)]
-        )
-    )
-    lut_pd = F.expr(
-        "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-    # r13: the m per-sub LUT joins collapse into ONE — unpivot the
-    # candidate's m code columns to (query_id, vec_id, sub, code) rows
-    # and equi-join the single (query_id, sub, code) broadcast LUT
-    # built from ONE scan of the stored pq_centroids. Identical pd
-    # rows reach the DECIMAL adc sum.
-    cand_sub = cand.select(
-        "query_id",
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("int").alias("sub"),
-                        F.col(f"c{s}").alias("code"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("sc"),
-    ).select("query_id", "vec_id", F.col("sc.sub").alias("sub"), F.col("sc.code").alias("code"))
-    qsub = _explode_subs(
-        queries.select("query_id", "v"), m, d_sub, id_col="query_id"
-    ).withColumnRenamed("v", "qv")
-    lut = qsub.join(pq_cent, "sub").select(
-        "query_id", "sub", F.col("cluster").alias("code"), lut_pd.alias("pd")
-    )
-    allp = cand_sub.join(
-        F.broadcast(lut), ["query_id", "sub", "code"]
-    ).select("query_id", "vec_id", F.col("pd").cast(DIST_DEC).alias("pd"))
-    adc = allp.groupBy("query_id", "vec_id").agg(F.sum("pd").alias("adc"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(
             "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
+            "vec_id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(s).cast("int").alias("sub"),
+                            F.col(f"c{s}").alias("code"),
+                        )
+                        for s in range(m)
+                    ]
+                )
+            ).alias("sc"),
         )
+        .select("query_id", "vec_id", "sc.sub", "sc.code")
+    )
+    return _adc_topk(
+        cand_sub, queries.select("query_id", "v"), pq_cent, m, dim // m, topk
     )
 
 
@@ -1286,10 +1187,11 @@ def ivfpq_adc_topk(
 
     Plan shape: one decode + localCheckpoint of the vectors; coarse
     assignment localCheckpoints (it feeds both the query and candidate
-    sides of the IVF join); each subspace trains on a lazy slice of
-    the SAME base; LUTs are broadcast (n_queries x k_pq rows); the ADC
-    join chain is candidates ⋈ codes ⋈ broadcast-LUT — all equi-joins
-    keyed by vec_id / (query_id, code). At 100 TB: train both
+    sides of the IVF join); the PQ codebook trains on a lazy
+    per-subspace slice of the SAME base; the LUT is broadcast
+    (n_queries x m x k_pq rows); the ADC join chain is candidates ⋈
+    codes ⋈ broadcast-LUT — all equi-joins keyed by vec_id /
+    (query_id, sub, code). At 100 TB: train both
     codebooks on a hash-sampled subset, localCheckpoint the tiny
     centroid tables, and this exact plan encodes + scans the full
     table with candidate volume bounded by N/k_coarse per query."""
@@ -1297,68 +1199,28 @@ def ivfpq_adc_topk(
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d_sub = dim // m
     base = _decoded_base(emb, id_col, vec_col)
-    # Fused multi-subspace path (r13): ONE (sub, cluster)-keyed Lloyd
-    # chain over the exploded table, its tiny (m*k_pq)-row codebook
-    # localCheckpointed so the encode, the LUT and nothing else ever
-    # re-executes training; the per-sub parts union collapses into a
-    # single (query_id, sub, code) LUT equi-join. Identical rows reach
-    # the DECIMAL adc sum — same per-subspace arithmetic, same
-    # (query_id, vec_id) groups. The coarse and PQ chains are
-    # independent, so they run as concurrent driver-thread jobs
-    # (guide §2.6).
-    bsub = _explode_subs(base, m, d_sub)
+    one, bsub = _one_sub(base), _explode_subs(base, m, d_sub)
+    # The coarse quantizer and the PQ codebook are two runs of the one
+    # Lloyd chain; both localCheckpoint (the coarse assignment feeds
+    # both sides of the IVF join, the m*k_pq-row codebook feeds the
+    # encode and the LUT), and the runs are independent, so they go
+    # as concurrent driver-thread jobs (guide §2.6).
     coarse, cent = _run_concurrent(
-        lambda: _lloyd_from_base(base, k_coarse, iters, dim)
+        lambda: _assign(
+            one, _to_persub(_lloyd_cents(one, k_coarse, iters, dim))
+        )
         .select("vec_id", "cluster")
         .localCheckpoint(),
-        lambda: _lloyd_multi_cents(
-            bsub, k_pq, iters, d_sub, seed="first"
-        ).localCheckpoint(),
+        lambda: _lloyd_cents(bsub, k_pq, iters, d_sub).localCheckpoint(),
     )
     qc = coarse.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("cluster").alias("qcl")
     )
-    cand = (
-        qc.join(coarse, F.col("qcl") == F.col("cluster"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
+    queries = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), "v"
     )
-    qbase = base.filter(F.col("vec_id") < n_queries)
-    lut_pd = F.expr(
-        "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-    codes = _assign_multi(bsub, _to_persub(cent)).select(
-        "vec_id", "sub", F.col("cluster").alias("code")
-    )
-    qsub = _explode_subs(
-        qbase.select(F.col("vec_id").alias("query_id"), "v"),
-        m,
-        d_sub,
-        id_col="query_id",
-    ).withColumnRenamed("v", "qv")
-    lut = qsub.join(cent, "sub").select(
-        "query_id", "sub", F.col("cluster").alias("code"), lut_pd.alias("pd")
-    )
-    allp = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "sub", "code"])
-        .select("query_id", "vec_id", F.col("pd").cast(DIST_DEC).alias("pd"))
-    )
-    adc = allp.groupBy("query_id", "vec_id").agg(F.sum("pd").alias("adc"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy("adc", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("adc").cast("double"), 6).alias("adc_dist"),
-        )
-    )
+    cand_sub = _ivf_candidates(qc, coarse, bsub, cent)
+    return _adc_topk(cand_sub, queries, cent, m, d_sub, topk)
 
 
 def pca_top_component(

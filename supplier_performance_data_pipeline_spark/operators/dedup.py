@@ -202,18 +202,23 @@ def char_ngram_near_dup_pairs(
     return _pairs_from_sigs(sigs, k, bands)
 
 
-def _band_exprs(
-    prefix: str = "mh", k: int = MINHASH_K, bands: int = LSH_BANDS
-) -> list[str]:
+def _banded(
+    sigs: DataFrame, *carry: str, k: int = MINHASH_K, bands: int = LSH_BANDS
+) -> DataFrame:
+    """(doc_id, *carry, band, band_hash): one row per (doc, LSH band),
+    where band_hash is the md5 of the band's k/bands signature
+    components — the bucket key of every banded LSH join."""
     assert k % bands == 0, f"bands={bands} must divide k={k}"
     per_band = k // bands
-    out = []
-    for b in range(bands):
-        parts = ", ".join(
-            f"{prefix}{b * per_band + j}" for j in range(per_band)
-        )
-        out.append(f"md5(concat_ws('|', {parts}))")
-    return out
+    hashes = ", ".join(
+        "md5(concat_ws('|', "
+        + ", ".join(f"mh{b * per_band + j}" for j in range(per_band))
+        + "))"
+        for b in range(bands)
+    )
+    return sigs.selectExpr(
+        "doc_id", *carry, f"posexplode(array({hashes})) AS (band, band_hash)"
+    )
 
 
 def lsh_candidate_pairs(
@@ -222,11 +227,7 @@ def lsh_candidate_pairs(
     """Candidate pairs via banded LSH: explode band hashes, equi-join on
     (band index, band hash), dedupe. This is the scale path — the join
     key is the band bucket, so only same-bucket docs ever meet."""
-    banded = sigs.selectExpr(
-        "doc_id",
-        f"posexplode(array({', '.join(_band_exprs(k=k, bands=bands))}))"
-        " AS (band, band_hash)",
-    )
+    banded = _banded(sigs, k=k, bands=bands)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -256,16 +257,8 @@ def lsh_candidate_pairs_between(
     done). Same (band, band_hash) bucket equi-join as
     ``lsh_candidate_pairs``; the pair is ORDERED (probe, index), no
     doc_id inequality needed because the sides are disjoint."""
-
-    def banded(sigs: DataFrame) -> DataFrame:
-        return sigs.selectExpr(
-            "doc_id",
-            f"posexplode(array({', '.join(_band_exprs(k=k, bands=bands))}))"
-            " AS (band, band_hash)",
-        )
-
-    a = banded(probe).alias("a")
-    b = banded(index).alias("b")
+    a = _banded(probe, k=k, bands=bands).alias("a")
+    b = _banded(index, k=k, bands=bands).alias("b")
     return (
         a.join(
             b,
@@ -297,17 +290,8 @@ def verified_pairs_between(
     matches happens after scoring (exact: the score is a function of
     the pair)."""
     mh_cols = [f"mh{j}" for j in range(k)]
-
-    def banded(sigs: DataFrame) -> DataFrame:
-        return sigs.selectExpr(
-            "doc_id",
-            *mh_cols,
-            f"posexplode(array({', '.join(_band_exprs(k=k, bands=bands))}))"
-            " AS (band, band_hash)",
-        )
-
-    a = banded(probe).alias("a")
-    b = banded(index).alias("b")
+    a = _banded(probe, *mh_cols, k=k, bands=bands).alias("a")
+    b = _banded(index, *mh_cols, k=k, bands=bands).alias("b")
     matches = " + ".join(f"if(a.mh{j} = b.mh{j}, 1, 0)" for j in range(k))
     return (
         a.join(
@@ -383,12 +367,7 @@ def _pairs_from_sigs(
     at parity for sparse-pair corpora, strictly better when pairs are
     plentiful (the regime that matters)."""
     mh_cols = [f"mh{j}" for j in range(k)]
-    banded = sigs.selectExpr(
-        "doc_id",
-        *mh_cols,
-        f"posexplode(array({', '.join(_band_exprs(k=k, bands=bands))}))"
-        " AS (band, band_hash)",
-    )
+    banded = _banded(sigs, *mh_cols, k=k, bands=bands)
     a = banded.alias("a")
     b = banded.alias("b")
     matches = " + ".join(f"if(a.mh{j} = b.mh{j}, 1, 0)" for j in range(k))

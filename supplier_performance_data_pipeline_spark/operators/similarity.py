@@ -69,6 +69,17 @@ def dot_expr(a_sql: str, b_sql: str) -> str:
     )
 
 
+def sq_dist_expr(a_sql: str, b_sql: str) -> str:
+    """Squared L2 distance as a SQL string: a left-to-right double fold
+    over the per-dimension squared differences, bit-identical to the
+    DuckDB oracles' ``list_sum(list_transform(...))``. Every k-means,
+    PQ and ANN distance uses this one expression."""
+    return (
+        f"aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> (x - y) * (x - y)), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
 def lsh_bucket_expr(vec_sql: str, dim: int, n_planes: int = N_PLANES) -> str:
     """Sign-bit bucket id from ``n_planes`` hyperplane projections, as a
     single SQL string — the Column-API form costs ~(n_planes × dim)

@@ -34,7 +34,10 @@ def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: NO spread here — this shared builder feeds metadata-only and
     # light-Arrow consumers (features/frame_sample/byte_entropy) whose
     # Python work is cheap per row; the exchange cost outweighs the
-    # parallelism on them (r13 VERDICT #5). The heavy codec builders
+    # parallelism on them (r13 VERDICT #5). It also feeds
+    # multimodal_ahash_near_dup, which runs an Arrow hashing pass and a
+    # band self-join on it, so at small SFs that query's parallelism is
+    # the parquet scan's split count. The heavy codec builders
     # (_image/_png/_jpeg/_audio synth) carry their own spread_scan next
     # to the opaque Python work they parallelize.
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))

@@ -20,6 +20,7 @@ from supplier_performance_data_pipeline_spark.operators.similarity import (
     hyperplane,
     label_centroids,
     lsh_topk,
+    sq_dist_expr,
 )
 from supplier_performance_data_pipeline_spark.plans.registry import register
 from supplier_performance_data_pipeline_spark.session import tune_session
@@ -1014,8 +1015,7 @@ def q_embedding_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFram
     )
     m = F.expr(
         "array_min(transform(cents, s -> struct("
-        "aggregate(zip_with(v, s.cv, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x) AS d, s.lbl AS pred)))"
+        f"{sq_dist_expr('v', 's.cv')} AS d, s.lbl AS pred)))"
     )
     assigned = base.crossJoin(F.broadcast(cents_1row)).select(
         "label", m["pred"].alias("pred_label")
@@ -1432,10 +1432,7 @@ def q_ann_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            F.expr(
-                "aggregate(zip_with(v, qv, (x, y) -> (x - y) * (x - y)), "
-                "0.0D, (acc, x) -> acc + x)"
-            ).alias("d"),
+            F.expr(sq_dist_expr("v", "qv")).alias("d"),
         )
     )
     from pyspark.sql.window import Window
@@ -2304,10 +2301,7 @@ def q_ann_codebook_retrain_trigger(
         .select(
             "query_id",
             "vec_id",
-            F.expr(
-                "aggregate(zip_with(v, qv, (x, y) -> (x - y) * (x - y)), "
-                "0.0D, (acc, x) -> acc + x)"
-            ).alias("d"),
+            F.expr(sq_dist_expr("v", "qv")).alias("d"),
         )
     )
     w = Window.partitionBy("query_id").orderBy("d", "vec_id")
@@ -2470,13 +2464,9 @@ def q_embedding_jl_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("pv").alias("rpv"),
     )
     pairs = bp.join(rhs, F.col("r_id") == F.col("vec_id") + F.lit(1))
-    fold = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
     scored = pairs.select(
-        F.expr(fold.format(a="v", b="rv")).alias("orig_d2"),
-        F.expr(fold.format(a="pv", b="rpv")).alias("proj_d2"),
+        F.expr(sq_dist_expr("v", "rv")).alias("orig_d2"),
+        F.expr(sq_dist_expr("pv", "rpv")).alias("proj_d2"),
     ).filter(F.col("orig_d2") > 0)
     ratio = (F.col("proj_d2") * F.lit(float(DIM))) / (
         F.lit(float(JL_M)) * F.col("orig_d2")
@@ -2820,17 +2810,12 @@ def q_embedding_label_noise_margin(spark: SparkSession, sf_dir: str) -> DataFram
     cents_1row = cents.agg(
         F.expr("collect_list(struct(label AS lbl, cv AS cv)) AS cents")
     )
-    fold = (
-        "aggregate(zip_with(v, {cv}, (x, y) -> (x - y) * (x - y)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-    d_own = F.expr(
-        fold.format(cv="element_at(filter(cents, s -> s.lbl = label), 1).cv")
-    )
+    own_cv = "element_at(filter(cents, s -> s.lbl = label), 1).cv"
+    d_own = F.expr(sq_dist_expr("v", own_cv))
     best_other = F.expr(
         "array_min(transform(filter(cents, s -> s.lbl != label), "
         "s -> struct("
-        + fold.format(cv="s.cv")
+        + sq_dist_expr("v", "s.cv")
         + " AS d, s.lbl AS pred)))"
     )
     scored = (

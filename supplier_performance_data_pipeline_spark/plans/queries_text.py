@@ -3563,17 +3563,12 @@ def q_lsh_bucket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over the (band, size) table, bounded by the distinct
     size count, not the corpus."""
     from supplier_performance_data_pipeline_spark.operators.dedup import (
-        _band_exprs,
+        _banded,
         minhash_signatures,
     )
 
     sigs = minhash_signatures(_docs(spark, sf_dir))
-    banded = sigs.selectExpr(
-        "doc_id",
-        f"posexplode(array({', '.join(_band_exprs())}))"
-        " AS (band, band_hash)",
-    )
-    sz = banded.groupBy("band", "band_hash").agg(
+    sz = _banded(sigs).groupBy("band", "band_hash").agg(
         F.count("*").alias("bucket_size")
     )
     return (

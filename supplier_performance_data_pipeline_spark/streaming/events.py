@@ -298,9 +298,12 @@ def run_to_memory_sink(
     ``shuffle_partitions`` (optional) pins the stream's state-store
     partition count for the run — set it from
     ``replay_state_bytes_partitions`` so the replay's state fan-out
-    tracks its input size; the session conf is restored afterwards
-    (the count is locked into the query's own checkpoint at the first
-    micro-batch, so restoring cannot affect the running query).
+    tracks its input size; the session conf is restored right after
+    ``start()``. That is safe because the ``StreamExecution`` built by
+    ``start()`` runs on a clone of the session made in its constructor:
+    the clone holds the count from then on (the query checkpoint only
+    records it later, at the first micro-batch), so restoring the
+    shared conf cannot affect the running query.
 
     CONCURRENCY CONTRACT (r13 ADVICE): Spark session conf is shared
     across driver threads, so the set→restore window here would leak
@@ -327,10 +330,9 @@ def run_to_memory_sink(
                     .start()
                 )
             finally:
-                # The partition count is captured into the query's own
-                # checkpoint at start; restore as soon as that has
-                # happened so the lock guards the narrowest possible
-                # window.
+                # start() has already cloned the session, conf
+                # included, for the query's StreamExecution; restore
+                # now so the lock guards the narrowest possible window.
                 if prev is not None:
                     spark.conf.set("spark.sql.shuffle.partitions", prev)
         q.processAllAvailable()

@@ -1064,6 +1064,17 @@ def test_ivfpq_recall_audit_no_cartesian_and_broadcast_queries(spark, specs):
     assert "ShuffledHashJoin" not in plan
 
 
+def test_ivfpq_adc_topk_has_no_sort_merge_join(spark, specs):
+    """The IVF candidate join (query lists ⋈ coarse assignment) stays
+    a broadcast of the query side. The checkpointed coarse assignment
+    carries the Lloyd chain's multiplied size estimate, so without the
+    explicit broadcast of the (≤ n_queries-row) query lists the join
+    plans as a sort-merge join."""
+    plan = plan_of(spark, specs, "ann_ivfpq_adc_topk")
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
 def test_jl_audit_two_scan_pair_equi_join(spark, specs):
     plan = plan_of(spark, specs, "embedding_jl_distortion_audit")
     assert "CartesianProduct" not in plan

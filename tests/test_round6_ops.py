@@ -159,6 +159,61 @@ def test_ivfpq_partition_invariant(spark, emb):
     assert a == b
 
 
+def _tiny_emb(spark, vecs):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in vecs.items()],
+        "vec_id long, embedding array<double>",
+    )
+
+
+def test_pq_encode_one_subspace_equals_kmeans(spark):
+    """PQ with m=1 is plain k-means: both run the one Lloyd chain, so
+    the single code per vector must equal its k-means cluster. Two
+    well-separated groups seeded by ids 0 and 1 make the clusters
+    hand-computable."""
+    from supplier_performance_data_pipeline_spark.operators.clustering import (
+        kmeans_assignments,
+        pq_encode,
+    )
+
+    vecs = {
+        0: (0, 0), 1: (10, 10), 2: (0, 1), 3: (1, 0), 4: (10, 11), 5: (11, 10)
+    }
+    emb = _tiny_emb(spark, vecs)
+    km = {
+        r["vec_id"]: r["cluster"]
+        for r in kmeans_assignments(emb, k=2, dim=2).collect()
+    }
+    pq = {
+        r["vec_id"]: r["codes"]
+        for r in pq_encode(emb, dim=2, m=1, k=2).collect()
+    }
+    assert km == {0: 0, 1: 1, 2: 0, 3: 0, 4: 1, 5: 1}
+    assert pq == {i: [c] for i, c in km.items()}
+
+
+def test_rank_seeding_takes_lowest_training_ids(spark):
+    """``seed="rank"`` renumbers the k lowest training ids 0..k-1 in
+    every subspace: on ids 10..15 (rows shuffled), ids 10 and 11 seed
+    clusters 0 and 1."""
+    from supplier_performance_data_pipeline_spark.operators.clustering import (
+        _explode_subs,
+        _lloyd_cents,
+    )
+
+    vecs = {i: (i, -i, 2 * i, 0.5 * i) for i in (13, 11, 15, 10, 14, 12)}
+    base = _tiny_emb(spark, vecs).repartition(3).select(
+        "vec_id", F.col("embedding").alias("v")
+    )
+    seeds = _lloyd_cents(_explode_subs(base, 2, 2), 2, 0, 2, seed="rank")
+    got = {(r["sub"], r["cluster"]): list(r["cv"]) for r in seeds.collect()}
+    assert got == {
+        (s, c): [float(x) for x in vecs[10 + c][2 * s : 2 * s + 2]]
+        for s in (0, 1)
+        for c in (0, 1)
+    }
+
+
 # --- aHash -------------------------------------------------------------------
 
 
