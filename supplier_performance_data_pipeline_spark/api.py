@@ -15,10 +15,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from supplier_performance_data_pipeline_spark.operators.kpis import supplier_kpis
 from supplier_performance_data_pipeline_spark.operators.risk import (
     supplier_risk_summary,
 )
-from supplier_performance_data_pipeline_spark.plans.queries_core import _kpis
+from supplier_performance_data_pipeline_spark.plans.tpch_domain import (
+    domain_per_po_fused,
+)
 from supplier_performance_data_pipeline_spark.session import tune_session
 from supplier_performance_data_pipeline_spark.sources.readers import load_testdata
 from supplier_performance_data_pipeline_spark.streaming.events import (
@@ -31,8 +34,11 @@ def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
     the derived supplier_kpis / supplier_risk_summary views. Returns the
     view names.
 
-    Base-table views are lazy: registering them runs no job. The two
-    derived views are materialized here, once per call: the KPI table is
+    Base-table views are lazy scans with declared schemas
+    (``readers.load_testdata``): registering them runs one job, the
+    ``events`` schema inference, and a table whose columns differ from
+    its declaration fails here. The two derived views are materialized
+    here, once per call, from the registered scans: the KPI table is
     built once and locally checkpointed, and the risk summary is scored
     from that checkpoint and checkpointed in turn. Both are one row per
     supplier. Their checkpoint blocks are reclaimed by the ContextCleaner
@@ -48,7 +54,11 @@ def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
         tables["events"] = normalize_event_ts(tables["events"])
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
-    kpis = _kpis(spark, sf_dir).localCheckpoint()
+    kpis = supplier_kpis(
+        domain_per_po_fused(
+            tables["supplier"], tables["nation"], tables["lineitem"], tables["orders"]
+        )
+    ).localCheckpoint()
     kpis.createOrReplaceTempView("supplier_kpis")
     supplier_risk_summary(kpis).localCheckpoint().createOrReplaceTempView(
         "supplier_risk_summary"

@@ -27,6 +27,7 @@ from supplier_performance_data_pipeline_spark.operators.quality import (
 from supplier_performance_data_pipeline_spark.operators.risk import (
     supplier_risk_summary,
 )
+from supplier_performance_data_pipeline_spark.sources.readers import read_parquet
 from supplier_performance_data_pipeline_spark.sources.writers import write_parquet
 
 
@@ -36,7 +37,9 @@ def run_pipeline(
     cfg: GeneratorConfig | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end run; returns the materialized tables (re-read from
-    Parquet, so each stage's output is what downstream actually sees)."""
+    Parquet, so each stage's output is what downstream actually sees).
+    Each re-read declares the schema just written, so it runs no
+    schema-inference job."""
     os.makedirs(warehouse_dir, exist_ok=True)
 
     # Stage 1+2: generate + load (write-through with integrity checks,
@@ -45,8 +48,8 @@ def run_pipeline(
     for name, df in tables.items():
         write_parquet(df, os.path.join(warehouse_dir, name))
     loaded = {
-        name: spark.read.parquet(os.path.join(warehouse_dir, name))
-        for name in tables
+        name: read_parquet(spark, os.path.join(warehouse_dir, name), df.schema)
+        for name, df in tables.items()
     }
     counts = row_counts(loaded)
     assert_unique_key(loaded["suppliers"], "supplier_id")
@@ -64,13 +67,15 @@ def run_pipeline(
         loaded["suppliers"], loaded["purchase_orders"], loaded["deliveries"]
     )
     write_parquet(kpis, os.path.join(warehouse_dir, "supplier_kpis"))
-    kpis = spark.read.parquet(os.path.join(warehouse_dir, "supplier_kpis"))
+    kpis = read_parquet(
+        spark, os.path.join(warehouse_dir, "supplier_kpis"), kpis.schema
+    )
 
     # Stage 4: risk (reference: src/compute_risk.py:36-113).
     risk = supplier_risk_summary(kpis)
     write_parquet(risk, os.path.join(warehouse_dir, "supplier_risk_summary"))
-    risk = spark.read.parquet(
-        os.path.join(warehouse_dir, "supplier_risk_summary")
+    risk = read_parquet(
+        spark, os.path.join(warehouse_dir, "supplier_risk_summary"), risk.schema
     )
 
     return {**loaded, "supplier_kpis": kpis, "supplier_risk_summary": risk,

@@ -11,10 +11,14 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from supplier_performance_data_pipeline_spark.schemas import TESTDATA_TABLES
+from supplier_performance_data_pipeline_spark.schemas import (
+    TESTDATA_SCHEMAS,
+    TESTDATA_TABLES,
+)
 
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -28,11 +32,43 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).option("header", True).csv(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan (vectorized reader, pushdown-capable)."""
+def read_parquet(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Parquet scan (vectorized reader, pushdown-capable).
+
+    Without ``schema`` Spark infers it, which runs one job. With it the
+    read runs none, but Spark would read a declared column the file lacks
+    as all-NULL, so every file's footer columns are checked against the
+    declaration first, in this process. A column of the wrong type fails
+    the first read (``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``).
+    """
     if not _exists(spark, path):
         raise FileNotFoundError(f"input not found: {path}")
-    return spark.read.parquet(path)
+    if schema is None:
+        return spark.read.parquet(path)
+    _check_footer_columns(path, schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _check_footer_columns(path: str, schema: T.StructType) -> None:
+    """Raise unless every Parquet file at ``path``, one file or an
+    unpartitioned Spark-written directory, holds exactly the columns of
+    ``schema``. Reads footers only; runs no Spark job."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(root, f)
+        for root, _, names in os.walk(path)
+        for f in names
+        if not f.startswith(("_", "."))  # Spark's hidden-file rule
+    ]
+    want = set(schema.fieldNames())
+    for f in files:
+        got = set(pq.read_schema(f).names)
+        if got != want:
+            raise ValueError(
+                f"{f} does not match its declared schema: missing columns "
+                f"{sorted(want - got)}, undeclared columns {sorted(got - want)}"
+            )
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
@@ -71,12 +107,20 @@ def read_jsonl(
 def load_testdata(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES
 ) -> dict[str, DataFrame]:
-    """Load the driver testdata tables present under ``sf_dir``."""
+    """Load the testdata tables (TESTDATA.md) present under ``sf_dir``.
+
+    Every table but ``events`` is read with its declared schema
+    (``schemas.TESTDATA_SCHEMAS``), so loading runs one job, the
+    ``events`` inference, and a file whose columns differ from the
+    declaration fails here (see ``read_parquet``). The registered
+    queries' own readers (``queries_*._t``) keep inferring: tests read
+    warehouses of partial tables through them, such as a ``lineitem`` of
+    three columns, which a declared schema would reject."""
     out: dict[str, DataFrame] = {}
     for name in tables:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
+            out[name] = read_parquet(spark, path, TESTDATA_SCHEMAS.get(name))
     return out
 
 

@@ -1,15 +1,24 @@
 """api.create_views: the derived supplier_kpis / supplier_risk_summary
 views are materialized once per call, and hold the registered queries'
-rows."""
+rows. Base tables are read with declared schemas: no inference job, and
+a file that disagrees with its declaration fails rather than reading
+NULLs."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from supplier_performance_data_pipeline_spark.api import create_views
 from supplier_performance_data_pipeline_spark.functions.scalar import round_doubles
 from supplier_performance_data_pipeline_spark.plans.registry import load_all
+from supplier_performance_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
 from tests.conftest import SF_SMOKE
 
 DERIVED = ["supplier_kpis", "supplier_risk_summary"]
@@ -53,3 +62,55 @@ def test_second_create_views_replaces_derived_views(spark, views):
     for v in DERIVED:
         assert "LogicalRDD" in _optimized_plan(spark, v)
         assert spark.table(v).count() == before[v]
+
+
+@pytest.mark.parametrize("table", sorted(TESTDATA_SCHEMAS))
+def test_declared_schema_matches_inferred(spark, table):
+    # Names and types; file sources read every column as nullable.
+    inferred = spark.read.parquet(os.path.join(SF_SMOKE, f"{table}.parquet")).schema
+    assert [(f.name, f.dataType) for f in TESTDATA_SCHEMAS[table]] == [
+        (f.name, f.dataType) for f in inferred
+    ]
+
+
+def test_create_views_job_count(spark):
+    # 1 events schema inference, 5 jobs for the KPI checkpoint, 3 for the
+    # risk checkpoint; the declared-schema reads run none.
+    sc = spark.sparkContext
+    group = "test_create_views_job_count"
+    sc.setJobGroup(group, "create_views")
+    try:
+        create_views(spark, SF_SMOKE)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
+
+
+def _warehouse_with(tmp_path, table: str, edit) -> str:
+    """A copy of SF_SMOKE with ``table`` rewritten as ``edit(table)``."""
+    shutil.copytree(SF_SMOKE, tmp_path, dirs_exist_ok=True)
+    path = tmp_path / f"{table}.parquet"
+    pq.write_table(edit(pq.read_table(path)), path)
+    return str(tmp_path)
+
+
+def test_missing_column_fails_at_create_views(spark, tmp_path):
+    wh = _warehouse_with(tmp_path, "supplier", lambda t: t.drop(["s_nationkey"]))
+    with pytest.raises(ValueError, match=r"supplier\.parquet.*missing columns \['s_nationkey'\]"):
+        create_views(spark.newSession(), wh)
+
+
+def test_wrong_typed_column_fails_on_first_read(spark, tmp_path):
+    def as_string(t):
+        i = t.schema.get_field_index("s_nationkey")
+        return t.set_column(i, "s_nationkey", t.column(i).cast(pa.string()))
+
+    wh = _warehouse_with(tmp_path, "supplier", as_string)
+    # A session of its own, so the broken views stay out of the shared one.
+    session = spark.newSession()
+    mismatch = "FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH"
+    with pytest.raises(Py4JJavaError, match=mismatch):
+        create_views(session, wh)
+    with pytest.raises(Py4JJavaError, match=mismatch):
+        session.table("supplier").collect()
