@@ -6,15 +6,22 @@ anti pattern is a ``left_anti`` join — same semantics, and Catalyst plans
 it as a broadcast/shuffled anti join without materializing the outer rows.
 
 PRIMARY KEY constraints have no Spark equivalent; ``assert_unique_key``
-is the declarative replacement (count vs. countDistinct in one agg).
+is the declarative replacement.
 
-Two orphan checks stay on purpose: on the nightly load one anti-join
-``orphan_count`` per direction costs about half the CPU of routing the
-same assertion through the union aggregate, while ``orphan_counts_df``
-keeps the registered queries' both-direction count join-free.
+The assertions ask whether any row fails, not how many do: each runs a
+``.limit(1)`` probe for one offending row, and only when it finds one
+computes the counts its message reports, so a clean load pays for one
+probe per check. ``row_counts`` counts every table in one aggregate over
+their tagged union instead of one count action each.
+
+``orphan_count`` (the failure message's count) and ``orphan_counts_df``
+(the registered queries' join-free both-direction count) are two orphan
+counts; one union aggregate for all five nightly checks would replace both.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,29 +78,47 @@ def orphan_counts_df(
 
 
 def assert_unique_key(df: DataFrame, key: str) -> None:
-    """PK-style uniqueness check: COUNT(*) == COUNT(DISTINCT key) and no NULLs."""
+    """PK-style uniqueness check: no key value twice and no NULL key.
+
+    One probe for a duplicate or NULL key; on failure the message reports
+    COUNT(*), COUNT(key) and COUNT(DISTINCT key)."""
+    bad = (
+        df.groupBy(key).count()
+        .filter((F.col("count") > 1) | F.col(key).isNull())
+        .limit(1)
+        .collect()
+    )
+    if not bad:
+        return
     row = df.agg(
         F.count("*").alias("n"),
         F.count(key).alias("n_nonnull"),
         F.countDistinct(key).alias("n_distinct"),
     ).collect()[0]
-    if row.n != row.n_distinct or row.n != row.n_nonnull:
-        raise AssertionError(
-            f"key {key!r} not unique/non-null: rows={row.n} "
-            f"nonnull={row.n_nonnull} distinct={row.n_distinct}"
-        )
+    raise AssertionError(
+        f"key {key!r} not unique/non-null: rows={row.n} "
+        f"nonnull={row.n_nonnull} distinct={row.n_distinct}"
+    )
 
 
 def assert_referential_integrity(
     child: DataFrame, parent: DataFrame, on: str, label: str = ""
 ) -> None:
     """Fail if any child row lacks a parent (reference's hard invariant:
-    every PO has exactly one delivery and vice versa)."""
-    n = orphan_count(child, parent, on)
-    if n:
+    every PO has exactly one delivery and vice versa). One probe for an
+    orphan; ``orphan_count`` runs only on failure, for the message."""
+    if child.join(parent, on, "left_anti").limit(1).collect():
+        n = orphan_count(child, parent, on)
         raise AssertionError(f"referential integrity violated {label}: {n} orphans")
 
 
 def row_counts(tables: dict[str, DataFrame]) -> dict[str, int]:
-    """Row-count sanity (reference: src/load_duckdb.py:97-105)."""
-    return {name: df.count() for name, df in tables.items()}
+    """Row-count sanity (reference: src/load_duckdb.py:97-105), as one
+    ``groupBy(table).count()`` over the tagged union of the tables; a
+    table absent from the result has no rows."""
+    tagged = reduce(
+        DataFrame.unionAll,
+        (df.select(F.lit(name).alias("table")) for name, df in tables.items()),
+    )
+    got = {r["table"]: r["count"] for r in tagged.groupBy("table").count().collect()}
+    return {name: got.get(name, 0) for name in tables}

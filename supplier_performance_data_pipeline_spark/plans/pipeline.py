@@ -38,8 +38,8 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """End-to-end run; returns the materialized tables (re-read from
     Parquet, so each stage's output is what downstream actually sees).
-    Each re-read declares the schema just written, so it runs no
-    schema-inference job."""
+    Each re-read takes the schema Spark stored in the files it just
+    wrote, so it runs no schema-inference job."""
     os.makedirs(warehouse_dir, exist_ok=True)
 
     # Stage 1+2: generate + load (write-through with integrity checks,
@@ -48,8 +48,8 @@ def run_pipeline(
     for name, df in tables.items():
         write_parquet(df, os.path.join(warehouse_dir, name))
     loaded = {
-        name: read_parquet(spark, os.path.join(warehouse_dir, name), df.schema)
-        for name, df in tables.items()
+        name: read_parquet(spark, os.path.join(warehouse_dir, name))
+        for name in tables
     }
     counts = row_counts(loaded)
     assert_unique_key(loaded["suppliers"], "supplier_id")
@@ -67,16 +67,12 @@ def run_pipeline(
         loaded["suppliers"], loaded["purchase_orders"], loaded["deliveries"]
     )
     write_parquet(kpis, os.path.join(warehouse_dir, "supplier_kpis"))
-    kpis = read_parquet(
-        spark, os.path.join(warehouse_dir, "supplier_kpis"), kpis.schema
-    )
+    kpis = read_parquet(spark, os.path.join(warehouse_dir, "supplier_kpis"))
 
     # Stage 4: risk (reference: src/compute_risk.py:36-113).
     risk = supplier_risk_summary(kpis)
     write_parquet(risk, os.path.join(warehouse_dir, "supplier_risk_summary"))
-    risk = read_parquet(
-        spark, os.path.join(warehouse_dir, "supplier_risk_summary"), risk.schema
-    )
+    risk = read_parquet(spark, os.path.join(warehouse_dir, "supplier_risk_summary"))
 
     return {**loaded, "supplier_kpis": kpis, "supplier_risk_summary": risk,
             "_row_counts": counts}  # type: ignore[dict-item]

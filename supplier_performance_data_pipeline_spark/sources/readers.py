@@ -9,6 +9,8 @@ hand Spark a declarative scan; ``.explain`` on downstream queries shows
 
 from __future__ import annotations
 
+import json
+import math
 import os
 
 import pyarrow.parquet as pq
@@ -26,49 +28,91 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
 
     Reference parity: src/load_duckdb.py:76-95 (read_csv_auto into
     pre-declared typed tables; the explicit DDL is the contract).
+
+    Small inputs are packed into split-sized tasks: the read is coalesced
+    to ``ceil(input bytes / spark.sql.files.openCostInBytes)`` partitions
+    when that is fewer than the input's files. ``openCostInBytes`` is
+    Spark's own price of opening a file, in bytes it could scan instead,
+    so a task reading less is mostly overhead. A nightly table of a few
+    MB then reads, and writes, as one task and one file; large inputs
+    keep Spark's splits.
     """
     if not _exists(spark, path):
         raise FileNotFoundError(f"input not found: {path}")
-    return spark.read.schema(schema).option("header", True).csv(path)
+    df = spark.read.schema(schema).option("header", True).csv(path)
+    files = _data_files(path)
+    # the session's parsed value; the conf string may carry a unit ("4k")
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    n = max(1, math.ceil(sum(map(os.path.getsize, files)) / open_cost))
+    return df.coalesce(n) if n < len(files) else df
 
 
 def read_parquet(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    """Parquet scan (vectorized reader, pushdown-capable).
+    """Parquet scan (vectorized reader, pushdown-capable); runs no job
+    when ``schema`` is given or when Spark wrote the files.
 
-    Without ``schema`` Spark infers it, which runs one job. With it the
-    read runs none, but Spark would read a declared column the file lacks
-    as all-NULL, so every file's footer columns are checked against the
-    declaration first, in this process. A column of the wrong type fails
-    the first read (``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``).
+    Footers are read in this process, once per file (``_footer_schema``).
+    With ``schema``, the footer columns are checked against it first,
+    because Spark would read a declared column the file lacks as
+    all-NULL; a column of the wrong type fails the first read
+    (``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``). Without it,
+    the schema Spark's writer stored in every footer is declared, which
+    is the schema Spark's own inference would take from it. Spark infers
+    (one job) when any file lacks that schema, when the files disagree,
+    or when the directory is partitioned.
     """
     if not _exists(spark, path):
         raise FileNotFoundError(f"input not found: {path}")
-    if schema is None:
-        return spark.read.parquet(path)
-    _check_footer_columns(path, schema)
-    return spark.read.schema(schema).parquet(path)
+    schema = _footer_schema(path, schema)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
-def _check_footer_columns(path: str, schema: T.StructType) -> None:
-    """Raise unless every Parquet file at ``path``, one file or an
-    unpartitioned Spark-written directory, holds exactly the columns of
-    ``schema``. Reads footers only; runs no Spark job."""
-    files = [path] if os.path.isfile(path) else [
+# Where Spark's Parquet writer stores the written schema as JSON, and
+# where its schema inference looks first (ParquetFileFormat.readSchemaFromFooter).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str, declared: T.StructType | None) -> T.StructType | None:
+    """The schema to declare for a Parquet read of ``path``, from one pass
+    over its footers; runs no Spark job.
+
+    With ``declared``, raise unless every file, one file or an
+    unpartitioned Spark-written directory, holds exactly its columns, and
+    return it. Without, return the Spark-written schema that every file
+    at ``path`` stores, or None when a file lacks it, the files disagree
+    or the directory is partitioned (data files below a subdirectory)."""
+    files = _data_files(path)
+    if declared is not None:
+        want = set(declared.fieldNames())
+        for f in files:
+            got = set(pq.read_schema(f).names)
+            if got != want:
+                raise ValueError(
+                    f"{f} does not match its declared schema: missing columns "
+                    f"{sorted(want - got)}, undeclared columns {sorted(got - want)}"
+                )
+        return declared
+    if any(os.path.dirname(os.path.relpath(f, path)) for f in files):
+        return None
+    stored = {(pq.read_schema(f).metadata or {}).get(_SPARK_SCHEMA_KEY) for f in files}
+    if len(stored) != 1 or None in stored:
+        return None
+    return T.StructType.fromJson(json.loads(stored.pop()))
+
+
+def _data_files(path: str) -> list[str]:
+    """``path`` itself, or every data file below the directory ``path``."""
+    if os.path.isfile(path):
+        return [path]
+    return [
         os.path.join(root, f)
         for root, _, names in os.walk(path)
         for f in names
         if not f.startswith(("_", "."))  # Spark's hidden-file rule
     ]
-    want = set(schema.fieldNames())
-    for f in files:
-        got = set(pq.read_schema(f).names)
-        if got != want:
-            raise ValueError(
-                f"{f} does not match its declared schema: missing columns "
-                f"{sorted(want - got)}, undeclared columns {sorted(got - want)}"
-            )
 
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:

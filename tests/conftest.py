@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 import pytest
 
@@ -32,3 +33,23 @@ def spark():
         },
     )
     yield spark
+
+
+@pytest.fixture
+def job_count(spark):
+    """``job_count(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns its result and the number of jobs that group ran."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -5,11 +5,14 @@ clean input passes."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
 from supplier_performance_data_pipeline_spark.operators.quality import (
     assert_referential_integrity,
     assert_unique_key,
+    row_counts,
 )
+from supplier_performance_data_pipeline_spark.sources.readers import read_csv
 
 
 def _keys(spark, *ids):
@@ -48,3 +51,31 @@ def test_referential_integrity_rejects_delivery_without_po(spark):
     assert_referential_integrity(po, dl, "po_id", "po->delivery")
     with pytest.raises(AssertionError, match=r"delivery->po: 1 orphans"):
         assert_referential_integrity(dl, po, "po_id", "delivery->po")
+
+
+def _loaded(spark, tmp_path, name, *ids):
+    """Keys as the nightly loads them: a CSV directory of 4 part files read
+    by ``read_csv``, which packs it into one split."""
+    path = str(tmp_path / name)
+    _keys(spark, *ids).repartition(4).write.option("header", True).csv(path)
+    return read_csv(spark, path, T.StructType([T.StructField("po_id", T.StringType())]))
+
+
+def test_clean_checks_run_at_most_two_jobs_each(spark, tmp_path, job_count):
+    po = _loaded(spark, tmp_path, "po", *"abcdefgh")
+    dl = _loaded(spark, tmp_path, "dl", *"hgfedcba")
+    _, n = job_count(lambda: assert_unique_key(po, "po_id"))
+    assert n <= 2
+    _, n = job_count(lambda: assert_referential_integrity(po, dl, "po_id", "po->delivery"))
+    assert n <= 2
+    tables = {"po": po, "dl": dl, "one": _keys(spark, "x")}
+    counts, n = job_count(lambda: row_counts(tables))
+    assert counts == {"po": 8, "dl": 8, "one": 1}
+    assert n <= 2
+
+
+def test_row_counts_reports_empty_table(spark):
+    assert row_counts({"po": _keys(spark, "a", "b"), "empty": _keys(spark)}) == {
+        "po": 2,
+        "empty": 0,
+    }

@@ -4,11 +4,18 @@ overwrite idempotency (SURVEY.md §2.1 S1-S6)."""
 from __future__ import annotations
 
 import datetime as dt
+import decimal
+import glob
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from supplier_performance_data_pipeline_spark.sources.readers import read_csv
+from supplier_performance_data_pipeline_spark.sources.readers import (
+    read_csv,
+    read_parquet,
+)
 from supplier_performance_data_pipeline_spark.sources.writers import write_parquet
 
 SCHEMA = T.StructType(
@@ -34,6 +41,89 @@ def test_csv_round_trip_schema(spark, tmp_path):
     back = read_csv(spark, path, SCHEMA)
     assert back.schema == SCHEMA  # declared, never inferred
     assert sorted(map(tuple, back.collect())) == sorted(ROWS)
+
+
+def _csv_parts(spark, tmp_path, n_parts):
+    rows = [(i, f"n{i}", dt.date(2024, 1, 1 + i % 28), i / 4) for i in range(40)]
+    path = str(tmp_path / "parts.csv")
+    spark.createDataFrame(rows, SCHEMA).repartition(n_parts).write.option(
+        "header", True
+    ).mode("overwrite").csv(path)
+    assert len(glob.glob(f"{path}/part-*.csv")) == n_parts
+    return path, rows
+
+
+def test_small_csv_reads_as_one_task(spark, tmp_path):
+    path, rows = _csv_parts(spark, tmp_path, 4)
+    back = read_csv(spark, path, SCHEMA)
+    assert back.rdd.getNumPartitions() == 1
+    assert sorted(map(tuple, back.collect())) == rows
+
+
+def test_csv_above_open_cost_keeps_spark_splits(spark, tmp_path):
+    path, rows = _csv_parts(spark, tmp_path, 4)
+    tiny = spark.newSession()
+    tiny.conf.set("spark.sql.files.openCostInBytes", "8")
+    back = read_csv(tiny, path, SCHEMA)
+    plain = tiny.read.schema(SCHEMA).option("header", True).csv(path)
+    assert back.rdd.getNumPartitions() == plain.rdd.getNumPartitions() > 1
+    assert sorted(map(tuple, back.collect())) == rows
+
+
+WIDE = T.StructType(
+    [
+        T.StructField("id", T.LongType(), nullable=False),
+        T.StructField("d", T.DateType()),
+        T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("amt", T.DecimalType(12, 2)),
+        T.StructField(
+            "s",
+            T.StructType(
+                [T.StructField("a", T.IntegerType()), T.StructField("b", T.StringType())]
+            ),
+        ),
+    ]
+)
+WIDE_ROWS = [
+    (1, dt.date(2024, 1, 1), dt.datetime(2024, 1, 1, 2, 3), decimal.Decimal("1.25"), (1, "x")),
+    (2, None, None, None, None),
+    (3, dt.date(2024, 2, 29), dt.datetime(2024, 2, 29), decimal.Decimal("-7.00"), (None, "z")),
+]
+
+
+def test_spark_written_parquet_rereads_without_a_job(spark, tmp_path, job_count):
+    path = str(tmp_path / "wide")
+    write_parquet(spark.createDataFrame(WIDE_ROWS, WIDE).repartition(2), path)
+    back, jobs = job_count(lambda: read_parquet(spark, path))
+    assert jobs == 0
+    assert back.schema.json() == spark.read.parquet(path).schema.json()
+    assert sorted(map(tuple, back.collect())) == WIDE_ROWS
+
+
+def test_pyarrow_written_parquet_infers(spark, tmp_path, job_count):
+    path = str(tmp_path / "pa.parquet")
+    pq.write_table(pa.table({"x": [1, 2], "y": ["a", None]}), path)
+    back, jobs = job_count(lambda: read_parquet(spark, path))
+    assert jobs == 1
+    assert back.schema.json() == spark.read.parquet(path).schema.json()
+
+
+def test_partitioned_parquet_keeps_partition_column(spark, tmp_path):
+    path = str(tmp_path / "hive")
+    write_parquet(spark.createDataFrame(WIDE_ROWS, WIDE), path, partition_by=["id"])
+    back = read_parquet(spark, path)
+    assert back.schema.json() == spark.read.parquet(path).schema.json()
+    assert "id" in back.columns
+    assert sorted(r.id for r in back.collect()) == [1, 2, 3]
+
+
+def test_parquet_files_of_different_schemas_infer(spark, tmp_path, job_count):
+    path = str(tmp_path / "mixed")
+    spark.createDataFrame([(1, "a")], "id long, a string").write.parquet(path)
+    spark.createDataFrame([(2, 5)], "id long, b int").write.mode("append").parquet(path)
+    back, jobs = job_count(lambda: read_parquet(spark, path))
+    assert jobs == 1
+    assert back.schema.json() == spark.read.parquet(path).schema.json()
 
 
 def test_partitioned_parquet_prunes(spark, tmp_path):
