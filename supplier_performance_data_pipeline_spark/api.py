@@ -8,15 +8,20 @@ views over the parquet scans, so Catalyst prunes and pushes down per
 query. The derived ``supplier_kpis`` and ``supplier_risk_summary`` are
 materialized once per ``create_views`` call, like the reference's stored
 tables (src/compute_kpis.py, src/compute_risk.py), so dashboard requests
-read them instead of re-running KPI and risk scoring.
+read them instead of re-running KPI and risk scoring. The summary is also
+held on the driver (``serving.hold``), where the dashboard's widget
+functions answer from it without a Spark job, as the reference dashboard
+answers from its one pandas copy (dashboard/app.py:38-214).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from supplier_performance_data_pipeline_spark.operators import serving
 from supplier_performance_data_pipeline_spark.operators.kpis import supplier_kpis
 from supplier_performance_data_pipeline_spark.operators.risk import (
+    observe_kpi_bounds,
     supplier_risk_summary,
 )
 from supplier_performance_data_pipeline_spark.plans.tpch_domain import (
@@ -39,10 +44,15 @@ def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
     ``events`` schema inference, and a table whose columns differ from
     its declaration fails here. The two derived views are materialized
     here, once per call, from the registered scans: the KPI table is
-    built once and locally checkpointed, and the risk summary is scored
-    from that checkpoint and checkpointed in turn. Both are one row per
-    supplier. Their checkpoint blocks are reclaimed by the ContextCleaner
-    once a later call replaces the views."""
+    built once and locally checkpointed, with the risk bounds observed on
+    that checkpoint's job, and the risk summary is scored from the
+    checkpoint with the bounds as literals and checkpointed in turn. Both
+    are one row per supplier. The summary is then collected once as
+    Arrow (``serving.hold``, up to ``serving.HELD_ROWS`` rows), so the
+    widget functions answer requests on the view without a Spark job.
+    That makes 8 jobs in all. The checkpoint blocks are reclaimed by the
+    ContextCleaner once a later call replaces the views and the held
+    copy."""
     tune_session(spark)
     # The events table stores ts as TIMESTAMP(NANOS) in some driver
     # generations (vectorized reader rejects it — read nanos as long)
@@ -54,15 +64,19 @@ def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
         tables["events"] = normalize_event_ts(tables["events"])
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
-    kpis = supplier_kpis(
-        domain_per_po_fused(
-            tables["supplier"], tables["nation"], tables["lineitem"], tables["orders"]
+    kpis, bounds = observe_kpi_bounds(
+        supplier_kpis(
+            domain_per_po_fused(
+                tables["supplier"], tables["nation"], tables["lineitem"], tables["orders"]
+            )
         )
-    ).localCheckpoint()
+    )
+    kpis = kpis.localCheckpoint()
     kpis.createOrReplaceTempView("supplier_kpis")
-    supplier_risk_summary(kpis).localCheckpoint().createOrReplaceTempView(
+    supplier_risk_summary(kpis, bounds.get).localCheckpoint().createOrReplaceTempView(
         "supplier_risk_summary"
     )
+    serving.hold(spark.table("supplier_risk_summary"))
     return [*tables, "supplier_kpis", "supplier_risk_summary"]
 
 

@@ -6,6 +6,10 @@ table, then a broadcast cross join attaches the 1-row bounds to every row.
 We deliberately do NOT use an empty-frame window (``Window.partitionBy()``)
 — that forces all rows into one partition and dies at 100 TB; the
 agg + broadcast-crossJoin shape is embarrassingly parallel (SURVEY.md §4).
+A caller that materializes the KPI table anyway can instead observe the
+same 8 aggregates on that action (``observe_kpi_bounds``: partial per
+task, merged on the driver) and score with the bounds as literals, with
+no bounds job and no join.
 
 risk_score = 0.7 * (1 - performance_score) + 0.3 * (financial_risk_score/100)
 (reference: src/compute_risk.py:104-108; README.md:145-158).
@@ -13,7 +17,7 @@ risk_score = 0.7 * (1 - performance_score) + 0.3 * (financial_risk_score/100)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from supplier_performance_data_pipeline_spark.functions.scalar import minmax_normalize
@@ -27,23 +31,39 @@ _NORM_SPEC = [
 ]
 
 
-def kpi_bounds(kpis: DataFrame) -> DataFrame:
-    """Global (ungrouped) MIN/MAX over the four KPI columns in one pass
-    (reference: the ``bounds`` CTE, src/compute_risk.py:39-53)."""
+def _bound_aggs() -> list[Column]:
     aggs = []
     for col, prefix, _ in _NORM_SPEC:
         aggs.append(F.min(col).alias(f"min_{prefix}"))
         aggs.append(F.max(col).alias(f"max_{prefix}"))
-    return kpis.agg(*aggs)
+    return aggs
 
 
-def supplier_risk_summary(kpis: DataFrame) -> DataFrame:
+def kpi_bounds(kpis: DataFrame) -> DataFrame:
+    """Global (ungrouped) MIN/MAX over the four KPI columns in one pass
+    (reference: the ``bounds`` CTE, src/compute_risk.py:39-53)."""
+    return kpis.agg(*_bound_aggs())
+
+
+def observe_kpi_bounds(kpis: DataFrame) -> tuple[DataFrame, Observation]:
+    """``kpis`` with the ``kpi_bounds`` aggregates observed on its next
+    action, and the Observation whose ``get`` returns them afterwards.
+    Min/max are idempotent, so a retried task cannot skew them."""
+    obs = Observation("kpi_bounds")
+    return kpis.observe(obs, *_bound_aggs()), obs
+
+
+def supplier_risk_summary(
+    kpis: DataFrame, bounds: dict[str, float | None] | None = None
+) -> DataFrame:
     """Normalize KPIs, average into performance_score, blend with
     financial risk into risk_score (reference: src/compute_risk.py:54-111).
 
-    ``kpis`` is read twice (bounds agg + the row side of the cross
-    join), so pass a materialized KPI table — a Parquet re-read or a
-    checkpoint; a caller holding the raw KPI plan checkpoints it first.
+    Without ``bounds``, ``kpis`` is read twice (bounds agg + the row side
+    of the cross join), so pass a materialized KPI table — a Parquet
+    re-read or a checkpoint; a caller holding the raw KPI plan
+    checkpoints it first. With ``bounds`` (``observe_kpi_bounds``'
+    values) they apply as literals and ``kpis`` is read once.
     """
     norm_cols = {
         "on_time_delivery_rate": "norm_on_time",
@@ -51,13 +71,18 @@ def supplier_risk_summary(kpis: DataFrame) -> DataFrame:
         "fill_rate": "norm_fill",
         "quality_issue_rate": "norm_quality",
     }
-    bounded = kpis.crossJoin(F.broadcast(kpi_bounds(kpis)))
-    normed = bounded.withColumns(
+    if bounds is None:
+        kpis = kpis.crossJoin(F.broadcast(kpi_bounds(kpis)))
+        bound = F.col
+    else:
+        def bound(name: str) -> Column:
+            return F.lit(bounds[name]).cast("double")
+    normed = kpis.withColumns(
         {
             norm_cols[col]: minmax_normalize(
                 F.col(col),
-                F.col(f"min_{prefix}"),
-                F.col(f"max_{prefix}"),
+                bound(f"min_{prefix}"),
+                bound(f"max_{prefix}"),
                 invert=invert,
             )
             for col, prefix, invert in _NORM_SPEC

@@ -74,8 +74,9 @@ def test_declared_schema_matches_inferred(spark, table):
 
 
 def test_create_views_job_count(spark):
-    # 1 events schema inference, 5 jobs for the KPI checkpoint, 3 for the
-    # risk checkpoint; the declared-schema reads run none.
+    # 1 events schema inference, 5 jobs for the KPI checkpoint (the risk
+    # bounds are observed on it), 1 for the risk checkpoint and 1 for the
+    # driver-held copy of the summary; the declared-schema reads run none.
     sc = spark.sparkContext
     group = "test_create_views_job_count"
     sc.setJobGroup(group, "create_views")
@@ -84,7 +85,7 @@ def test_create_views_job_count(spark):
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
 
 
 def _warehouse_with(tmp_path, table: str, edit) -> str:

@@ -6,12 +6,14 @@ from __future__ import annotations
 
 from datetime import date
 
+import pandas as pd
 import pytest
 
 from supplier_performance_data_pipeline_spark.operators.kpis import (
     compute_supplier_kpis,
 )
 from supplier_performance_data_pipeline_spark.operators.risk import (
+    observe_kpi_bounds,
     supplier_risk_summary,
 )
 from supplier_performance_data_pipeline_spark.schemas import (
@@ -246,3 +248,30 @@ def test_debounce_null_ts_dropped_and_gap_collision_raises(spark):
         debounce(
             df.withColumn("__debounce_gap", F.lit(0)), ["user_id"]
         )
+
+
+@pytest.mark.parametrize("rows", [
+    # Plain KPIs, a degenerate quality range and an int risk score.
+    [("S1", 0.5, 2.0, 0.8, 0.1, 40), ("S2", 1.0, -1.5, 0.6, 0.1, 80),
+     ("S3", 0.0, 0.0, 1.0, 0.1, None)],
+    # An all-NULL fill_rate, a NaN delay and -0.0 next to 0.0.
+    [("S1", 0.5, float("nan"), None, -0.0, 40), ("S2", 1.0, 2.0, None, 0.0, 80),
+     ("S3", None, -1.5, None, 0.25, None)],
+], ids=["plain", "null_nan_negative_zero"])
+def test_observed_bounds_score_like_the_bounds_join(spark, rows):
+    # create_views observes the bounds on the KPI checkpoint and scores
+    # with them as literals; the nightly and the registry aggregate and
+    # cross-join them. Both must give the same rows.
+    kpis = spark.createDataFrame(
+        rows,
+        "supplier_id string, on_time_delivery_rate double, "
+        "avg_delivery_delay_days double, fill_rate double, "
+        "quality_issue_rate double, financial_risk_score int",
+    ).localCheckpoint()
+    observed, bounds = observe_kpi_bounds(kpis)
+    got = supplier_risk_summary(observed.localCheckpoint(), bounds.get)
+    want = supplier_risk_summary(kpis)
+    pd.testing.assert_frame_equal(
+        got.toPandas().sort_values("supplier_id", ignore_index=True),
+        want.toPandas().sort_values("supplier_id", ignore_index=True),
+    )
