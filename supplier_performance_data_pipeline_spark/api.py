@@ -50,9 +50,10 @@ def create_views(spark: SparkSession, sf_dir: str) -> list[str]:
     are one row per supplier. The summary is then collected once as
     Arrow (``serving.hold``, up to ``serving.HELD_ROWS`` rows), so the
     widget functions answer requests on the view without a Spark job.
-    That makes 8 jobs in all. The checkpoint blocks are reclaimed by the
-    ContextCleaner once a later call replaces the views and the held
-    copy."""
+    That makes 7 jobs in all, since a base table of one split reads as
+    one partition and its aggregates need no shuffle stage. The
+    checkpoint blocks are reclaimed by the ContextCleaner once a later
+    call replaces the views and the held copy."""
     tune_session(spark)
     # The events table stores ts as TIMESTAMP(NANOS) in some driver
     # generations (vectorized reader rejects it — read nanos as long)

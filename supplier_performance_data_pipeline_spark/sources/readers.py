@@ -5,6 +5,15 @@ CSV read into pre-declared typed tables) plus the Parquet path the driver
 testdata uses. Column pruning and predicate pushdown are free because we
 hand Spark a declarative scan; ``.explain`` on downstream queries shows
 ``PushedFilters`` / pruned ``ReadSchema``.
+
+Both readers size their scan by one rule (``_packed``): an input of one
+split is declared one partition, and a small input of many files is
+packed into split-sized tasks. Declaring one partition moves no data,
+since Spark reads such an input in one task anyway; it gives the plan
+``SinglePartition`` output, which satisfies every clustered
+distribution, so an aggregate over the table plans no ``Exchange`` and
+runs as one job instead of two. Inputs above one split keep Spark's own
+partitioning.
 """
 
 from __future__ import annotations
@@ -29,22 +38,15 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     Reference parity: src/load_duckdb.py:76-95 (read_csv_auto into
     pre-declared typed tables; the explicit DDL is the contract).
 
-    Small inputs are packed into split-sized tasks: the read is coalesced
-    to ``ceil(input bytes / spark.sql.files.openCostInBytes)`` partitions
-    when that is fewer than the input's files. ``openCostInBytes`` is
-    Spark's own price of opening a file, in bytes it could scan instead,
-    so a task reading less is mostly overhead. A nightly table of a few
-    MB then reads, and writes, as one task and one file; large inputs
-    keep Spark's splits.
+    The scan is sized by ``_packed``: an input of one split reads as one
+    partition the planner knows of, so a nightly table of a few MB reads,
+    aggregates and writes as one task and one file; large inputs keep
+    Spark's splits.
     """
     if not _exists(spark, path):
         raise FileNotFoundError(f"input not found: {path}")
     df = spark.read.schema(schema).option("header", True).csv(path)
-    files = _data_files(path)
-    # the session's parsed value; the conf string may carry a unit ("4k")
-    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
-    n = max(1, math.ceil(sum(map(os.path.getsize, files)) / open_cost))
-    return df.coalesce(n) if n < len(files) else df
+    return _packed(spark, df, _data_files(path))
 
 
 def read_parquet(
@@ -62,12 +64,37 @@ def read_parquet(
     is the schema Spark's own inference would take from it. Spark infers
     (one job) when any file lacks that schema, when the files disagree,
     or when the directory is partitioned.
+
+    The scan is sized by ``_packed``, as ``read_csv``'s is: a one-split
+    table, such as every testdata table at sf0.01 and every table the
+    nightly writes, reads as one partition the planner knows of.
     """
     if not _exists(spark, path):
         raise FileNotFoundError(f"input not found: {path}")
-    schema = _footer_schema(path, schema)
+    files = _data_files(path)
+    schema = _footer_schema(path, files, schema)
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    return _packed(spark, reader.parquet(path), files)
+
+
+def _packed(spark: SparkSession, df: DataFrame, files: list[str]) -> DataFrame:
+    """``df``, a scan of ``files``, coalesced to ``n = ceil(input bytes /
+    split)`` partitions when ``n`` is 1 or fewer than the files.
+
+    ``split`` is ``min(spark.sql.files.maxPartitionBytes,
+    spark.sql.files.openCostInBytes)``. Spark never splits a scan finer
+    than the first, and the second is its price of opening a file, in
+    bytes it could scan instead, so a task reading less is mostly
+    overhead. At ``n == 1`` Spark reads the input in one task already,
+    and ``coalesce(1)`` moves no data: it only tells the planner that the
+    scan is one partition (``SinglePartition``), so an aggregate or join
+    above it needs no shuffle. ``coalesce`` never adds partitions, so an
+    input above one split keeps Spark's own."""
+    # the session's parsed values; the conf strings may carry a unit ("4k")
+    conf = spark._jsparkSession.sessionState().conf()
+    split = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+    n = max(1, math.ceil(sum(map(os.path.getsize, files)) / split))
+    return df.coalesce(n) if n == 1 or n < len(files) else df
 
 
 # Where Spark's Parquet writer stores the written schema as JSON, and
@@ -75,16 +102,18 @@ def read_parquet(
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_schema(path: str, declared: T.StructType | None) -> T.StructType | None:
-    """The schema to declare for a Parquet read of ``path``, from one pass
-    over its footers; runs no Spark job.
+def _footer_schema(
+    path: str, files: list[str], declared: T.StructType | None
+) -> T.StructType | None:
+    """The schema to declare for a Parquet read of ``path``, whose data
+    files are ``files``, from one pass over their footers; runs no Spark
+    job.
 
     With ``declared``, raise unless every file, one file or an
     unpartitioned Spark-written directory, holds exactly its columns, and
     return it. Without, return the Spark-written schema that every file
     at ``path`` stores, or None when a file lacks it, the files disagree
     or the directory is partitioned (data files below a subdirectory)."""
-    files = _data_files(path)
     if declared is not None:
         want = set(declared.fieldNames())
         for f in files:

@@ -74,7 +74,7 @@ def test_declared_schema_matches_inferred(spark, table):
 
 
 def test_create_views_job_count(spark):
-    # 1 events schema inference, 5 jobs for the KPI checkpoint (the risk
+    # 1 events schema inference, 4 jobs for the KPI checkpoint (the risk
     # bounds are observed on it), 1 for the risk checkpoint and 1 for the
     # driver-held copy of the summary; the declared-schema reads run none.
     sc = spark.sparkContext
@@ -85,7 +85,32 @@ def test_create_views_job_count(spark):
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+
+
+DRILLDOWN = (
+    "SELECT l_returnflag, COUNT(*) AS n_lines, SUM(l_quantity) AS qty, "
+    "SUM(l_extendedprice) AS revenue FROM lineitem "
+    "WHERE l_suppkey = {} GROUP BY l_returnflag"
+)
+
+
+def test_drilldown_runs_one_job(spark, views, job_count):
+    # lineitem is one split, so the aggregate plans no shuffle stage.
+    lineitem = pd.read_parquet(os.path.join(SF_SMOKE, "lineitem.parquet"))
+    supp = int(lineitem["l_suppkey"].iloc[0])
+    got, jobs = job_count(lambda: spark.sql(DRILLDOWN.format(supp)).toPandas())
+    assert jobs == 1
+    want = (
+        lineitem[lineitem["l_suppkey"] == supp]
+        .groupby("l_returnflag")
+        .agg(n_lines=("l_quantity", "size"), qty=("l_quantity", "sum"),
+             revenue=("l_extendedprice", "sum"))
+        .reset_index()
+    )
+    got = got.sort_values("l_returnflag").reset_index(drop=True)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def _warehouse_with(tmp_path, table: str, edit) -> str:

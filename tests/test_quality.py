@@ -12,7 +12,7 @@ from supplier_performance_data_pipeline_spark.operators.quality import (
     assert_unique_key,
     row_counts,
 )
-from supplier_performance_data_pipeline_spark.sources.readers import read_csv
+from supplier_performance_data_pipeline_spark.sources.readers import read_csv, read_parquet
 
 
 def _keys(spark, *ids):
@@ -72,6 +72,28 @@ def test_clean_checks_run_at_most_two_jobs_each(spark, tmp_path, job_count):
     counts, n = job_count(lambda: row_counts(tables))
     assert counts == {"po": 8, "dl": 8, "one": 1}
     assert n <= 2
+
+
+def _reread(spark, tmp_path, name, *ids):
+    """Keys as the nightly re-reads them: one Spark-written Parquet file
+    read by ``read_parquet``, which declares it one partition."""
+    path = str(tmp_path / name)
+    _keys(spark, *ids).coalesce(1).write.parquet(path)
+    return read_parquet(spark, path)
+
+
+def test_checks_on_one_split_rereads_run_one_job(spark, tmp_path, job_count):
+    po = _reread(spark, tmp_path, "po", *"abcdefgh")
+    _, n = job_count(lambda: assert_unique_key(po, "po_id"))
+    assert n == 1
+    tables = {
+        "po": po,
+        "dl": _reread(spark, tmp_path, "dl", *"hgfedcba"),
+        "one": _reread(spark, tmp_path, "one", "x"),
+    }
+    counts, n = job_count(lambda: row_counts(tables))
+    assert counts == {"po": 8, "dl": 8, "one": 1}
+    assert n == 1
 
 
 def test_row_counts_reports_empty_table(spark):

@@ -9,6 +9,7 @@ import glob
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,6 +69,61 @@ def test_csv_above_open_cost_keeps_spark_splits(spark, tmp_path):
     plain = tiny.read.schema(SCHEMA).option("header", True).csv(path)
     assert back.rdd.getNumPartitions() == plain.rdd.getNumPartitions() > 1
     assert sorted(map(tuple, back.collect())) == rows
+
+
+def _spark_written(spark, tmp_path, fmt, n_files):
+    """40 keyed rows written by Spark as ``n_files`` files of ``fmt``, and
+    the package's reader of it."""
+    rows = [(i, f"n{i}", dt.date(2024, 1, 1 + i % 28), i / 4) for i in range(40)]
+    path = str(tmp_path / f"t.{fmt}")
+    df = spark.createDataFrame(rows, SCHEMA).repartition(n_files)
+    if fmt == "csv":
+        df.write.option("header", True).csv(path)
+        return path, lambda s: read_csv(s, path, SCHEMA)
+    df.write.parquet(path)
+    return path, lambda s: read_parquet(s, path)
+
+
+def _plain(session, fmt, path):
+    if fmt == "csv":
+        return session.read.schema(SCHEMA).option("header", True).csv(path)
+    return session.read.parquet(path)
+
+
+def _by_day(df):
+    return df.groupBy("d").agg(F.count("*").alias("n"), F.sum("x").alias("x"))
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet"])
+def test_one_split_aggregates_without_a_shuffle(spark, tmp_path, job_count, fmt):
+    path, read = _spark_written(spark, tmp_path, fmt, 1)
+    agg = _by_day(read(spark))
+    assert "Exchange" not in agg._jdf.queryExecution().executedPlan().toString()
+    got, jobs = job_count(agg.collect)
+    assert jobs == 1
+    assert sorted(got) == sorted(_by_day(_plain(spark, fmt, path)).collect())
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet"])
+def test_above_one_split_keeps_spark_partitioning(spark, tmp_path, fmt):
+    path, read = _spark_written(spark, tmp_path, fmt, 1)
+    tiny = spark.newSession()
+    tiny.conf.set("spark.sql.files.openCostInBytes", "8")
+    back = read(tiny)
+    assert back.rdd.getNumPartitions() == _plain(tiny, fmt, path).rdd.getNumPartitions() > 1
+    plan = _by_day(back)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning" in plan
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet"])
+def test_small_max_partition_bytes_keeps_spark_splits(spark, tmp_path, fmt):
+    # A session that asks for splits smaller than the open cost is never
+    # packed below them.
+    path, read = _spark_written(spark, tmp_path, fmt, 4)
+    small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", "8")
+    back = read(small)
+    assert back.rdd.getNumPartitions() == _plain(small, fmt, path).rdd.getNumPartitions() > 4
 
 
 WIDE = T.StructType(
